@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import graft.core.{CorpusSpec, CrawlConfig, SynthCorpus}
 import graft.engine.CrawlEngine
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark harness. Prints ONE JSON line for the driver:
   *
@@ -87,23 +86,12 @@ object Bench {
     * SparkListener task metrics — invariant to the VM's clock throttling.
     */
   def crawlRound(cores: Int, scale: Int): (Long, Double, Double) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
+    // Session.CrawlLanding for the ~3.5 GB/round payload, plus no parquet
+    // page checksums on bench output (see the .crc toggle below)
+    val spark = Session.builder(cores)
       .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.hadoop.fs.file.impl", graft.engine.NioLocalFs.ImplClass)
-      // syscall-lean local landing for the ~3.5 GB/round payload: 1 MB
-      // write buffers instead of Hadoop's 4 KB default (FSOutputSummer
-      // otherwise flushes every ~4.5 KB -> ~1M write() calls/round), and
-      // stream (not mmap) reads for local shuffle blocks — mmap/munmap,
-      // fork and thread-create all serialize on the process mmap lock,
-      // which is exactly what collapses at 32 writer threads
-      .config("spark.hadoop.io.file.buffer.size", (1 << 20).toString)
+      .config(Session.CrawlLanding)
       .config("spark.hadoop.parquet.page.write-checksum.enabled", "false")
-      .config("spark.storage.memoryMapThreshold", "256m")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // skip the .crc shadow-file protocol on bench output: double creates +
@@ -256,15 +244,8 @@ object Bench {
       if (idleCap > 0) awaitCalmBox(idleCap) else 0.0
 
     // ---- operator queries over the driver's testdata ----
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-queries")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.hadoop.fs.file.impl", graft.engine.NioLocalFs.ImplClass)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark =
+      Session.builder(cpus).appName("graft-bench-queries").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val headline = Vector("q1_agg", "q_count_pushdown", "q_broadcast_join",
       "q_window_quota", "q_anti_join", "q_event_window", "q_topk", "q_rollup",

@@ -2,7 +2,6 @@ package graft
 
 import graft.core._
 import graft.engine.CrawlEngine
-import org.apache.spark.sql.SparkSession
 
 /** CLI crawl driver — the spark-submit entry point. Mirrors the reference
   * demo CLI (argparse flags in /root/reference/medcrawler/demo.py:155-176):
@@ -50,21 +49,12 @@ object Main {
     val opts = parse(args.toList, Map.empty)
     val out = opts.getOrElse("out",
       java.nio.file.Files.createTempDirectory("graft-crawl").toString)
-    val cores = opts.getOrElse("cores", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val cores =
+      opts.getOrElse("cores", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).toInt
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
+    val spark = Session.builder(cores)
       .appName("graft-crawl")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.hadoop.fs.file.impl", graft.engine.NioLocalFs.ImplClass)
-      // syscall-lean local payload landing (see Bench.crawlRound): 1 MB
-      // write buffers over Hadoop's 4 KB default, stream (not mmap) local
-      // shuffle reads
-      .config("spark.hadoop.io.file.buffer.size", (1 << 20).toString)
-      .config("spark.storage.memoryMapThreshold", "256m")
-      .config("spark.ui.enabled", "false")
+      .config(Session.CrawlLanding)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -8,7 +8,6 @@ package graft.core
   * ONE env knob without touching Spark's logging:
   *
   *   GRAFT_LOG=debug|info|warn|error   (default warn)
-  *   GRAFT_VERBOSE=1                   (legacy alias for debug)
   *
   * Lines land on stderr as `<ISO-8601 UTC> LEVEL [component] message`;
   * messages are by-name so a filtered call costs one int compare.
@@ -40,16 +39,13 @@ object Log {
   private val names =
     Map(Debug -> "DEBUG", Info -> "INFO", Warn -> "WARN", Error -> "ERROR")
 
-  private[core] val threshold: Int = {
-    val env = sys.env.get("GRAFT_LOG").map(_.toLowerCase)
-    if (env.isEmpty && sys.env.contains("GRAFT_VERBOSE")) Debug
-    else env match {
+  private[core] val threshold: Int =
+    sys.env.get("GRAFT_LOG").map(_.toLowerCase) match {
       case Some("debug") => Debug
       case Some("info") => Info
       case Some("error") => Error
       case _ => Warn
     }
-  }
 
   def apply(component: String): Log = new Log(component)
 

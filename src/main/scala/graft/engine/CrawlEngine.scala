@@ -335,74 +335,6 @@ object CrawlEngine {
     CrawlResult(outDir, m.round + 1, m.totalScheduled, m)
   }
 
-  /** One-time layout migration for a crawl dir committed by a pre-fold
-    * build, whose key sidecars accumulated up to ~16 run dirs plus live
-    * tombstone runs (the current probe path requires the folded
-    * single-run-per-sidecar invariant and would refuse to resume it).
-    * Folds each sidecar into one run dir — the frontier fold drops
-    * tombstoned versions, so the migrated run is live-members-only exactly
-    * like a current-build fold — and commits the migrated manifest stamped
-    * with the current [[Snapshot.Fmt]]. Idempotent: a current-format layout
-    * is returned unchanged, so calling this unconditionally before
-    * [[resume]] is safe.
-    */
-  def migrateKeySidecars(
-      spark: SparkSession,
-      outDir: String,
-      numBuckets: Int): Snapshot.Manifest = {
-    val m = Snapshot.latest(outDir).getOrElse(
-      sys.error(s"no committed snapshot under $outDir"))
-    if (m.fmt >= Snapshot.Fmt) return m
-    // numBuckets sanity (ADVICE r4): a value smaller than the layout's real
-    // bucket count would silently drop every bucket >= numBuckets from the
-    // folded runs and stamp the loss permanent (fmt bump hides it from
-    // resume). Derive the floor from the existing run files and fail loudly.
-    val bucketRe = "b(\\d+)\\.keys".r
-    val maxBucket = (m.seenKeyDirs ++ m.frontierKeyDirs ++ m.frontierRemDirs)
-      .flatMap(Fs.list)
-      .collect { case bucketRe(n) => n.toInt }
-      .foldLeft(-1)(math.max)
-    require(numBuckets > maxBucket,
-      s"numBuckets=$numBuckets but the layout has run files up to " +
-        s"bucket $maxBucket — migrating would silently drop buckets >= " +
-        s"$numBuckets; pass the crawl's original numBuckets")
-    // the too-LARGE direction is just as corrupting (probes re-bucket with
-    // pmod(hash, numBuckets) and miss every stored key) but can't be
-    // derived from run files (trailing buckets may be legitimately empty),
-    // so it's validated against the recorded value when one exists
-    require(m.buckets == 0 || m.buckets == numBuckets,
-      s"numBuckets=$numBuckets but the crawl was committed with " +
-        s"numBuckets=${m.buckets} — probes would re-bucket and miss " +
-        "every stored key; pass the crawl's original numBuckets")
-    val seenKeyDirs =
-      if (m.seenKeyDirs.size <= 1) m.seenKeyDirs
-      else {
-        val d = s"$outDir/seen_keys/migrate-v${m.snapshotId + 1}"
-        KeyLog.fold(spark, None, m.seenKeyDirs, Nil, d, numBuckets,
-          keepMaxAuxPerHash = true)
-        Vector(d)
-      }
-    val frontierKeyDirs =
-      // a fmt-1 single-run dir can still carry tombstoned versions (its
-      // rem runs were never folded out), so the frontier fold runs whenever
-      // tombstones exist, not just on multi-run shapes. The rem dirs stay
-      // in the manifest afterwards: readFrontier still filters the parquet
-      // add log with them until the next compaction.
-      if (m.frontierKeyDirs.size <= 1 && m.frontierRemDirs.isEmpty)
-        m.frontierKeyDirs
-      else {
-        val d = s"$outDir/frontier_keys/migrate-v${m.snapshotId + 1}"
-        KeyLog.fold(spark, None, m.frontierKeyDirs, m.frontierRemDirs, d,
-          numBuckets, keepMaxAuxPerHash = false)
-        Vector(d)
-      }
-    val migrated = m.copy(snapshotId = m.snapshotId + 1,
-      parentId = m.snapshotId, fmt = Snapshot.Fmt, buckets = numBuckets,
-      seenKeyDirs = seenKeyDirs, frontierKeyDirs = frontierKeyDirs)
-    Snapshot.commit(outDir, migrated)
-    migrated
-  }
-
   /** Exact resume from the latest committed snapshot. */
   def resume(
       spark: SparkSession,
@@ -411,12 +343,12 @@ object CrawlEngine {
       outDir: String): CrawlResult = {
     val m = Snapshot.latest(outDir).getOrElse(
       sys.error(s"no committed snapshot under $outDir"))
-    // validate the layout BEFORE any round runs — a pre-fold dir failing
+    // validate the layout BEFORE any round runs — an old layout failing
     // the mid-round invariant check would already have fetched a full
     // round's URLs before aborting
     require(m.fmt >= Snapshot.Fmt,
-      s"$outDir was committed by a pre-fold build (manifest fmt=${m.fmt}); " +
-        "run CrawlEngine.migrateKeySidecars once before resuming")
+      s"$outDir has manifest fmt=${m.fmt}, an unsupported layout (this " +
+        s"build needs fmt=${Snapshot.Fmt})")
     // bucket-count parity: every sidecar probe computes hostBucket =
     // pmod(hash, cfg.numBuckets), so resuming with a different value than
     // the one the runs were written with silently misses every membership
@@ -692,10 +624,11 @@ object CrawlEngine {
     // filters the parquet add log in readFrontier; it resets at major
     // compaction.
     require(m.seenKeyDirs.size <= 2 &&
-        m.frontierKeyDirs.nonEmpty && m.frontierKeyDirs.size <= 2,
+        m.frontierKeyDirs.nonEmpty && m.frontierKeyDirs.size <= 2 &&
+        m.frontierRemDirs.size <= 2,
       s"key sidecars must be tiered-folded (seen=${m.seenKeyDirs.size} " +
-        s"frontier=${m.frontierKeyDirs.size}) — a crawl dir committed by a " +
-        "pre-fold build resumes via CrawlEngine.migrateKeySidecars first")
+        s"frontier=${m.frontierKeyDirs.size} " +
+        s"rem=${m.frontierRemDirs.size}): unsupported layout")
     val notSeen =
       !KeyLog.seenLiveCol(m.bloomDir, m.seenKeyDirs, r, cfg.ttlRounds)(
         $"hostBucket", $"urlHash")
@@ -853,16 +786,9 @@ object CrawlEngine {
       var remDirs = if (rm > 0) m.frontierRemDirs :+ remDir else m.frontierRemDirs
       if (!willCompact) {
         // tombstone fold first (the add merge takes the result as drops).
-        if (rm > 0 || m.frontierRemDirs.size > 2) ph("foldFrontierRems") {
-          remDirs =
-            if (m.frontierRemDirs.size > 2)
-              // legacy self-heal: a resumed multi-raw-run layout collapses
-              // to one base run (tieredFold only tracks [base, l1])
-              tieredFold(spark, Vector.empty, remDirs, Nil,
-                remFoldDir, remFoldL1Dir, cfg, keepMaxAuxPerHash = false)
-            else
-              tieredFold(spark, m.frontierRemDirs, Seq(remDir),
-                Nil, remFoldDir, remFoldL1Dir, cfg, keepMaxAuxPerHash = false)
+        if (rm > 0) ph("foldFrontierRems") {
+          remDirs = tieredFold(spark, m.frontierRemDirs, Seq(remDir),
+            Nil, remFoldDir, remFoldL1Dir, cfg, keepMaxAuxPerHash = false)
         }
         if (a > 0) ph("foldFrontierKeys") {
           // drops = the FULL accumulated tombstone sidecar, so a base merge

@@ -51,12 +51,8 @@ object Snapshot {
     * @param seenCount   cumulative seen-stamp count between compactions (a TTL
     *                    refetch re-stamps the same URL); re-baselined to the
     *                    exact distinct-key count at each compaction
-    * @param fmt         manifest layout format. 1 = pre-fold builds (key
-    *                    sidecars accumulate run dirs, tombstones live);
-    *                    2 = folded single-run sidecars. A fmt-1 dir is shape-
-    *                    indistinguishable from fmt-2 when it has one key dir
-    *                    plus live tombstones, so the version — not the dir
-    *                    count — is what resume validates
+    * @param fmt         manifest layout format; [[CrawlEngine.resume]]
+    *                    refuses a layout older than [[Snapshot.Fmt]]
     * @param buckets     numBuckets the key sidecars + bloom were written
     *                    with. Probes compute hostBucket = pmod(hash, buckets),
     *                    so resuming with a DIFFERENT cfg.numBuckets silently
@@ -191,7 +187,7 @@ object Snapshot {
       strArr("fetchedDirs"), strArr("scheduleDirs"), strArr("metricsDirs"),
       str("bloomDir"), num("frontierCount"), num("seenCount"),
       num("fetchedCount"), bool("done"),
-      // absent in manifests written by pre-fold builds
+      // absent in old manifests: 1 lets resume refuse the layout
       fmt = "\"fmt\":(-?\\d+)".r.findFirstMatchIn(json)
         .map(_.group(1).toInt).getOrElse(1),
       // absent in manifests written by pre-buckets builds (0 = unknown)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Large-scale training-data text pipeline operators over the `documents`
@@ -307,15 +307,24 @@ object TextOps {
         size(split($"text", " ")).cast("bigint").as("n_tokens"),
         expr(s"cast(size(filter(split(text, ' '), t -> t IN ($stopList))) as bigint)")
           .as("n_stop"))
-      .withColumn("stop_ratio", round($"n_stop".cast("double") / $"n_tokens", 6))
+      .withColumn("stop_ratio", round6($"n_stop".cast("double") / $"n_tokens"))
       .withColumn("avg_tok_len",
-        round(($"n_chars_c" - ($"n_tokens" - 1)).cast("double") / $"n_tokens", 6))
-      .withColumn("quality", round(
+        round6(($"n_chars_c" - ($"n_tokens" - 1)).cast("double") / $"n_tokens"))
+      .withColumn("quality", round6(
         least($"n_tokens".cast("double") / 100.0, lit(1.0)) * 0.5 +
           least((($"n_chars_c" - ($"n_tokens" - 1)).cast("double") / $"n_tokens") / 8.0,
-            lit(1.0)) * 0.5, 6))
+            lit(1.0)) * 0.5))
       .orderBy($"doc_id")
   }
+
+  /** DuckDB's `round(x, 6)` on a double: round the binary value `x * 1e6`
+    * half away from zero, then divide. Spark's `round(x, 6)` rounds the
+    * shortest decimal string of `x` half-up instead, so the two split on
+    * ties: 40 tokens over 234 chars score 0.5046875, which Spark's form
+    * gives as 0.504688 and DuckDB as 0.504687. Scale 0 is exact here: a
+    * double prints as `n.5` only when it is exactly `n.5`.
+    */
+  private def round6(x: Column): Column = round(x * 1e6) / 1e6
 
   val textQualitySql: String = {
     val stopList = Stopwords.map(w => s"'$w'").mkString(", ")

@@ -1,9 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import graft.core._
-import graft.engine.CrawlEngine
+import graft.engine.{CrawlEngine, Snapshot}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,15 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CrawlEngineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("crawl-engine-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.hadoop.fs.file.impl", graft.engine.NioLocalFs.ImplClass)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Session.builder(4).appName("crawl-engine-spec").getOrCreate()
 
   private def tmpDir(): String =
     Files.createTempDirectory("crawl-spec").toString
@@ -119,13 +114,35 @@ class CrawlEngineSpec extends AnyFunSuite {
     val cfg = CrawlConfig(maxResults = 40, maxRounds = 2, numBuckets = 8)
     val dir = tmpDir()
     CrawlEngine.run(spark, spec, spec.defaultSeeds(1), cfg, dir)
+    val m = Snapshot.latest(dir).get
+    assert(!m.done, "the crawl needs a round left to run")
+    // each rejection fires at entry: a resume allowed one more round must
+    // leave the crawl dir exactly as it was
+    def layout(): Set[String] =
+      Files.walk(Paths.get(dir)).iterator.asScala.map(_.toString).toSet
+    def rejects(c: CrawlConfig, field: String): Unit = {
+      val before = layout()
+      val e = intercept[IllegalArgumentException] {
+        CrawlEngine.resume(spark, spec, c.copy(maxRounds = cfg.maxRounds + 1), dir)
+      }
+      assert(e.getMessage.contains(field), e.getMessage)
+      assert(layout() == before, "a rejected resume wrote state")
+    }
     // probes would compute pmod(hash, 4) against runs bucketed by
     // pmod(hash, 8) and miss every stored key — resume must fail loudly
     // at entry instead of silently refetching the whole seen set
-    val e = intercept[IllegalArgumentException] {
-      CrawlEngine.resume(spark, spec, cfg.copy(numBuckets = 4), dir)
+    rejects(cfg.copy(numBuckets = 4), "numBuckets")
+    // an old-layout manifest (fmt = 1, or no fmt field at all) is refused
+    val next = m.copy(snapshotId = m.snapshotId + 1, parentId = m.snapshotId)
+    val fmt1 = Snapshot.toJson(next.copy(fmt = 1))
+    val noFmt = Snapshot.toJson(next).replace(s""","fmt":${Snapshot.Fmt}""", "")
+    assert(!noFmt.contains("\"fmt\""), noFmt)
+    val nextPath = Paths.get(dir, "meta", s"v${next.snapshotId}.json")
+    for (json <- Seq(fmt1, noFmt)) {
+      Files.writeString(nextPath, json)
+      rejects(cfg, "fmt")
+      Files.delete(nextPath)
     }
-    assert(e.getMessage.contains("numBuckets"))
     // the recorded value still resumes
     val res = CrawlEngine.resume(spark, spec, cfg, dir)
     assert(res.manifest.buckets == 8)
@@ -370,7 +387,7 @@ class CrawlEngineSpec extends AnyFunSuite {
       val oracle = RefOracle.crawl(spec, seeds, cfg)
       val res = CrawlEngine.run(spark, spec, seeds, cfg, tmpDir())
       // drain the async listener bus, snapshot BEFORE the order query below
-      org.apache.spark.graft.TestBus.drain(spark.sparkContext)
+      org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
       val scansNow = scanned.toArray.map(_.toString)
       val joinsNow = shuffleJoins.toArray.map(_.toString)
       assert(engineOrder(res) == oracle.order)

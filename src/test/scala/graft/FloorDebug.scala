@@ -9,13 +9,7 @@ import org.apache.spark.sql.functions._
 object FloorDebug {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.hadoop.fs.file.impl", graft.engine.NioLocalFs.ImplClass)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)

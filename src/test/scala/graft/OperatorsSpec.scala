@@ -11,14 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class OperatorsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("operators-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.hadoop.fs.file.impl", graft.engine.NioLocalFs.ImplClass)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Session.builder(4).appName("operators-spec").getOrCreate()
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -598,5 +592,43 @@ class OperatorsSpec extends AnyFunSuite {
       graft.operators.GraphOps.connectedComponents(pairEdges, maxIters = 3)
     }
     assert(e.getMessage.contains("no fixpoint"))
+  }
+
+  test("connectedComponents restores the caller's job description when it " +
+      "throws") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val chain = (1L until 5L).map(i => (i, i + 1)).toDF("a", "b")
+    sc.setJobDescription("caller: outer job")
+    try {
+      intercept[IllegalStateException] {
+        graft.operators.GraphOps.connectedComponents(chain, maxIters = 2)
+      }
+      assert(sc.getLocalProperty("spark.job.description") == "caller: outer job")
+    } finally sc.setJobDescription(null)
+  }
+
+  test("text_quality rounds ties like its DuckDB twin (round x * 1e6 on the " +
+      "binary value)") {
+    import spark.implicits._
+    // (tokens, chars) pairs whose quality is a decimal tie at 6 places:
+    // 0.5046875, 0.2509375 and 0.5096875 are stored just below the tie, so
+    // DuckDB rounds them down; the expected values are DuckDB's output
+    val ties = Seq((40, 234, 0.504687), (8, 34, 0.250937), (16, 125, 0.509687))
+    val docs = ties.zipWithIndex.map { case ((nTok, nChars, _), id) =>
+      val letters = nChars - (nTok - 1)
+      val text = (0 until nTok)
+        .map(i => "z" * (letters / nTok + (if (i < letters % nTok) 1 else 0)))
+        .mkString(" ")
+      assert(text.length == nChars)
+      (id.toLong, text)
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("text-quality").toString
+    docs.toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
+    val got = graft.operators.TextOps.textQuality(spark, tmp)
+      .select("n_tokens", "n_chars_c", "quality").collect()
+      .map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getDouble(2))).toSeq
+    assert(got == ties)
+    graft.engine.Fs.delete(tmp)
   }
 }

@@ -9,11 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object ProbeBench {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.hadoop.fs.file.impl", graft.engine.NioLocalFs.ImplClass)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     try {

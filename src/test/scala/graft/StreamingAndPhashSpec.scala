@@ -7,14 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingAndPhashSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("streaming-phash-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.hadoop.fs.file.impl", graft.engine.NioLocalFs.ImplClass)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Session.builder(4).appName("streaming-phash-spec").getOrCreate()
 
   private val dir = "/root/testdata/sf0.001"
 
