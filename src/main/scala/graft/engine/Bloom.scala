@@ -2,13 +2,12 @@ package graft.engine
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DataType}
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -46,64 +45,6 @@ object Bloom {
 
   /** Create an empty bloom-state directory (fresh crawl, round 0). */
   def init(dir: String): Unit = Fs.mkdirs(dir)
-
-  /** Distributed per-bucket delta merge. The per-bucket delta filters come
-    * out of the [[BloomBuildAgg]] aggregation; each aggregation OUTPUT task
-    * then merges its bucket's delta with the previous round's bucket FILE
-    * and writes the new bucket file directly (tmp + atomic rename) — no
-    * filter bytes ever pass through the driver and no executor holds more
-    * than the buckets of its own partition. Buckets untouched by the delta
-    * are hard-linked from the previous round's directory (an O(numBuckets)
-    * driver-side metadata op, no data copied — the Iceberg
-    * "unchanged files carry over by reference" analog; on an HDFS-backed
-    * deployment the link becomes a manifest entry instead).
-    *
-    * expectedItems must be CONSTANT over the crawl: sketch Bloom filters
-    * merge only at identical bit size.
-    */
-  def mergeAndSave(
-      seenDelta: DataFrame,
-      prevDir: Option[String],
-      newDir: String,
-      expectedItems: Long,
-      fpp: Double): Unit = {
-    Fs.mkdirs(newDir)
-    val spark = seenDelta.sparkSession
-    import spark.implicits._
-    val prev = prevDir // local val: the closure must not capture a Manifest
-    val changed = seenDelta
-      .groupBy(col("hostBucket"))
-      .agg(bloomAgg(col("urlHash"), expectedItems, fpp).as("bloom"))
-      .as[(Int, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (bucket, deltaBytes) =>
-          val merged = prev.map(d => bucketPath(d, bucket))
-            .filter(Fs.exists) match {
-            case Some(p) =>
-              val bf = deserialize(Fs.readAllBytes(p))
-              bf.mergeInPlace(deserialize(deltaBytes))
-              serialize(bf)
-            case None => deltaBytes
-          }
-          // idempotent publish: a crash between mergeAndSave and
-          // Snapshot.commit re-runs the round and replaces the file
-          Fs.writeAtomic(bucketPath(newDir, bucket), merged)
-          bucket
-        }
-      }
-      .collect()
-      .toSet
-    prevDir.foreach { d =>
-      Fs.list(d).foreach { name =>
-        if (name.startsWith("b") && name.endsWith(".bloom")) {
-          val bucket = name.stripPrefix("b").stripSuffix(".bloom").toInt
-          if (!changed.contains(bucket))
-            Fs.carryForward(bucketPath(d, bucket), bucketPath(newDir, bucket))
-        }
-      }
-    }
-  }
-
 }
 
 /** Executor-local bucket-file cache for bloom probes: deserialize each

@@ -2,8 +2,13 @@ package graft.engine
 
 import java.nio.file.Paths
 
+import scala.jdk.CollectionConverters._
+
 import graft.core._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -50,7 +55,28 @@ import org.apache.spark.storage.StorageLevel
   *    than the round (last round) — steady-state rounds have no global
   *    ordering bottleneck;
   *  - fetch tasks are salted-range-repartitioned on (host, salt) so one
-  *    mega-host cannot serialize a partition (AQE skew join also on).
+  *    mega-host cannot serialize a partition (AQE skew join also on);
+  *  - generated code is ROUND-INVARIANT: the round number reaches the
+  *    generated Java as a reference ([[ProbeExpr.param]]), never as an
+  *    inlined literal, except in the two frontier `notBeforeRound` scan
+  *    filters, which keep `lit(r)` for parquet row-group pruning (those
+  *    scan stages are the only classes a round adds). Whether a warm round
+  *    then compiles nothing depends on Spark's codegen cache: 100 entries
+  *    by default (a static conf the engine cannot raise for a caller's
+  *    session), kept as 4 LRU segments of 25 and keyed by (context
+  *    classloader, source). A round runs under the local-mode task
+  *    classloader ([[TaskLoader]]), so the compile check Spark runs while
+  *    planning a whole-stage class and the tasks that run it share one
+  *    entry. The round keeps its class set small for that cache: one
+  *    checkpointed decision frame (no in-memory-columnar accessors) for
+  *    both quota phases, which run the same window over the same row
+  *    layout; one per-bucket pass for the seen parquet and every sidecar;
+  *    native expressions, not Scala UDFs or the interpreted `exists`, for
+  *    the URL functions and the robots check; no join for the 429 horizons
+  *    and no plan branch that depends on the round's data. A crawl_deep
+  *    round uses about 60 distinct classes, so every LRU segment holds its
+  *    share with high probability; the per-round `log.info` line reports
+  *    `compiled=<n> classes (<ms> ms)`.
   */
 object CrawlEngine {
 
@@ -190,15 +216,28 @@ object CrawlEngine {
 
   private val frontierCols: Seq[String] = frontierSchema.fieldNames.toSeq
 
+  /** The host-policy dimension's rows. `host` is non-nullable, so the left
+    * join infers no `isnotnull(host)` filter for the optimizer to evaluate
+    * over the local relation, and the rows convert to the relation without
+    * a generated encoder: two generated classes fewer per round.
+    */
+  private def policyFrame(spark: SparkSession, policies: Seq[HostPolicy]): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType(
+      Encoders.product[HostPolicy].schema.fields.map(f =>
+        if (f.name == "host") f.copy(nullable = false) else f))
+    spark.createDataFrame(policies.map(p => org.apache.spark.sql.Row(
+      p.host, p.minIntervalMs, p.quotaPerRound, p.robotsDisallow)).asJava, schema)
+  }
+
   /** LIVE frontier = union of add deltas minus tombstoned versions. The
     * tombstone filter is an executor-local exact pair probe — resolving the
-    * delta log costs NO shuffle, NO join, just the scan.
+    * delta log costs NO shuffle, NO join, just the scan. The add dirs are
+    * unpartitioned, so ONE scan lists them all: its plan (and generated
+    * code) does not change as the add log grows between compactions.
     */
   private[engine] def readFrontier(spark: SparkSession, m: Snapshot.Manifest): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val adds = m.frontierAddDirs
-      .map(d => spark.read.schema(frontierSchema).parquet(d))
-      .reduce(_ unionByName _)
+    val adds = spark.read.schema(frontierSchema).parquet(m.frontierAddDirs: _*)
     if (m.frontierRemDirs.isEmpty) adds
     else adds.where(!KeyLog.removedPairCol(m.frontierRemDirs)(
       col("hostBucket"), col("urlHash"), col("addedSeq")))
@@ -222,10 +261,10 @@ object CrawlEngine {
       spark.read.schema(attemptsSchema).option("basePath", d).parquet(d))
       .reduce(_ unionByName _)
 
-  // ---- UDFs pinned to graft.core.Canon (same code as the oracle) ----
-  private val canonUdf = udf((s: String) => Canon.canonicalize(s))
-  private val hostUdf = udf((s: String) => Canon.hostOf(s))
-  private val pathUdf = udf((s: String) => Canon.pathOf(s))
+  // ---- URL functions pinned to graft.core.Canon (same code as the oracle) ----
+  private val canonCol = ProbeExpr.stringFn("canonicalize", Canon.canonicalize) _
+  private val hostCol = ProbeExpr.stringFn("host_of", Canon.hostOf) _
+  private val pathCol = ProbeExpr.stringFn("path_of", Canon.pathOf) _
 
   /** Distributed synthetic seed generator: the [[CorpusSpec.allSeeds]]
     * enumeration built ON THE EXECUTORS (range over hosts, pages expanded
@@ -288,13 +327,13 @@ object CrawlEngine {
     // map-side, so the dedup is one shuffle of combined groups with no
     // per-partition sort
     val seedDf = seeds
-      .withColumn("canonUrl", canonUdf($"url"))
+      .withColumn("canonUrl", canonCol($"url"))
       .withColumn("urlHash", xxhash64($"canonUrl"))
     val frontier0 = seedDf
       .groupBy($"urlHash")
       .agg(min(struct(negate($"priority").as("negPriority"), $"seedId",
         $"url", $"canonUrl")).as("top"))
-      .withColumn("host", hostUdf($"top.canonUrl"))
+      .withColumn("host", hostCol($"top.canonUrl"))
       .select($"top.url".as("url"), $"top.canonUrl".as("canonUrl"), $"urlHash",
         $"host",
         pmod(xxhash64($"host"), lit(cfg.numBuckets)).cast("int").as("hostBucket"),
@@ -312,7 +351,7 @@ object CrawlEngine {
         .select($"hostBucket", $"urlHash", $"addedSeq".as("aux")),
       fkDir, cfg.numBuckets)
     log.debug(f"seed frontier write: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    val fCount = parquetRowCount(spark, fDir)
+    val fCount = Fs.parquetRowCount(fDir)
     val bloomDir = s"$outDir/bloom/r0"
     Bloom.init(bloomDir)
     val m0 = Snapshot.Manifest(0, -1, -1, 0L,
@@ -369,11 +408,19 @@ object CrawlEngine {
       start: Snapshot.Manifest): CrawlResult = {
     var m = start
     while (!m.done && m.round + 1 < cfg.maxRounds) {
+      // generated classes Janino compiled during the round, from Spark's
+      // process-wide codegen counters: compiles by concurrent queries of
+      // other callers in this JVM are counted too (see "Scale notes" in the
+      // class doc for what a warm round compiles)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       m = round(spark, spec, cfg, outDir, m)
       Snapshot.commit(outDir, m)
       log.info(s"round ${m.round} committed (v${m.snapshotId}): " +
         s"scheduled=${m.totalScheduled} frontier=${m.frontierCount} " +
-        s"seen=${m.seenCount} fetchedOk=${m.fetchedCount} done=${m.done}")
+        s"seen=${m.seenCount} fetchedOk=${m.fetchedCount} done=${m.done} " +
+        s"compiled=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
+        s"classes (${(CodeGenerator.compileTime - compileNs0) / 1000000L} ms)")
       Snapshot.expire(outDir, retain = 3)
     }
     CrawlResult(outDir, m.round + 1, m.totalScheduled, m)
@@ -382,8 +429,19 @@ object CrawlEngine {
   /** One scheduling round: the Catalyst pipeline described in the class doc.
     * Reads only committed state from `m`, writes the next snapshot's files,
     * and returns the manifest for the driver to commit.
+    * Runs under the local-mode task classloader ([[TaskLoader]]), so each
+    * whole-stage class of the round is compiled and cached once, not once
+    * for the compile check at planning time and once more for the tasks.
     */
   def round(
+      spark: SparkSession,
+      spec: CorpusSpec,
+      cfg: CrawlConfig,
+      outDir: String,
+      m: Snapshot.Manifest): Snapshot.Manifest =
+    TaskLoader.run(spark)(roundPlan(spark, spec, cfg, outDir, m))
+
+  private def roundPlan(
       spark: SparkSession,
       spec: CorpusSpec,
       cfg: CrawlConfig,
@@ -392,6 +450,11 @@ object CrawlEngine {
     import spark.implicits._
     val r = m.round + 1
     def ph[T](name: String)(f: => T): T = log.timed(s"round $r $name")(f)
+    // the round number as generated code sees it: a reference, not an
+    // inlined literal, so every round compiles the same classes. Only the
+    // two frontier `notBeforeRound` scan filters keep `lit(r)`, for parquet
+    // row-group pruning.
+    val thisRound = ProbeExpr.param(r)
 
     val frontier = readFrontier(spark, m)
     val eligible = frontier.where($"notBeforeRound" <= r)
@@ -414,19 +477,15 @@ object CrawlEngine {
     // `if pmid not in old_item_ids`, medcrawler/pubmed.py:185-187).
 
     // ---- robots + politeness dimension (J2: broadcast hash join) ----
-    val policyDf = spark.createDataset(spec.hostPolicies).toDF()
+    val policyDf = policyFrame(spark, spec.hostPolicies)
     val joined = eligible
       .join(broadcast(policyDf), Seq("host"), "left")
       .withColumn("minIntervalMs", coalesce($"minIntervalMs", lit(340)))
       .withColumn("quotaPerRound", coalesce($"quotaPerRound", lit(3)))
       .withColumn("robotsDisallow",
         coalesce($"robotsDisallow", array(lit("/private"))))
-      .withColumn("urlPath", pathUdf($"canonUrl"))
-      .withColumn("blocked",
-        exists($"robotsDisallow", p => $"urlPath".startsWith(p)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val blockedDf = joined.where($"blocked")
+      .withColumn("urlPath", pathCol($"canonUrl"))
+      .withColumn("blocked", ProbeExpr.anyPrefix($"robotsDisallow", $"urlPath"))
 
     // ---- per-host fetch quota (§2.5 window rank; ref batch caps 3/5) ----
     // Salted two-phase top-k: rank within (host, urlHash%S) and keep the
@@ -435,48 +494,55 @@ object CrawlEngine {
     // result is IDENTICAL to a single per-host window — but no task ever
     // sorts more than 1/S of a mega-host (phase 1) or S×quota rows
     // (phase 2). A 10^8-candidate host would serialize one window task
-    // under the naive plan; here it is bounded.
+    // under the naive plan; here it is bounded. Both phases rank EVERY
+    // eligible row, so one checkpointed frame carries the whole decision:
+    // robots-blocked rows rank in partitions of their own, and phase 2
+    // spreads the non-survivors over the salt partitions again (their rank
+    // there is never read), so the survivors' partition per host holds
+    // exactly the rows the per-host window needs. Both phases run the SAME
+    // window over the same row layout — partition (host, pb, ps), rank by
+    // (priority desc, urlHash asc) — and phase 2 only rewrites the two key
+    // columns in place (pb: not a phase-1 survivor, ps: its salt, -1 for
+    // survivors), so both phases share one set of generated classes.
     val quotaSalt = 16
-    val w1 = Window.partitionBy($"host", pmod($"urlHash", lit(quotaSalt)))
+    val quota = Window.partitionBy($"host", $"pb", $"ps")
       .orderBy($"priority".desc, $"urlHash".asc)
-    val wq = Window.partitionBy($"host")
-      .orderBy($"priority".desc, $"urlHash".asc)
-    val candidates = joined.where(!$"blocked")
-      .withColumn("rk1", row_number().over(w1))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ranked = candidates.where($"rk1" <= $"quotaPerRound")
-      .withColumn("rk", row_number().over(wq))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val quotaKept = ranked.where($"rk" <= $"quotaPerRound")
-    val quotaRejected = candidates.where($"rk1" > $"quotaPerRound").drop("rk1")
-      .unionByName(ranked.where($"rk" > $"quotaPerRound").drop("rk1", "rk"))
+    val survivor = !$"pb" && $"rk" <= $"quotaPerRound"
+    val decided = joined
+      .withColumn("pb", coalesce($"blocked", lit(true)))
+      .withColumn("ps", pmod($"urlHash", lit(quotaSalt.toLong)))
+      .withColumn("rk", row_number().over(quota))
+      .withColumn("ps", when(survivor, lit(-1L)).otherwise($"ps"))
+      .withColumn("pb", coalesce(!survivor, lit(true)))
+      .drop("rk")
+      .withColumn("rk", row_number().over(quota))
+      // checkpointed, not cached: its readers scan rows, so none of
+      // them compiles a columnar accessor or a batch-pruning predicate
+      .localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK)
+    val kept = !$"pb" && $"rk" <= $"quotaPerRound"
+    val quotaKept = decided.where(kept)
 
     // ---- global budget (L1): steady-state rounds skip the counting job
     // entirely — when the remaining budget covers the WHOLE frontier
     // (manifest row-count statistic, no job), truncation is impossible and
     // the scheduled count comes from the attempts-log parquet footers after
-    // the fetch. Only rounds near budget exhaustion pay for the scalar
-    // two-level aggregate (O(1) driver memory; the round-1 design collected
-    // O(hosts) rows).
+    // the fetch. Only rounds near budget exhaustion count the quota-kept
+    // rows (a scalar count, O(1) driver memory; the round-1 design
+    // collected O(hosts) rows).
     val remaining = math.max(0L, cfg.maxResults - m.totalScheduled)
     val keptCount =
       if (remaining >= m.frontierCount) -1L // sentinel: cannot truncate
-      else ph("keptCount")(
-        joined.where(!$"blocked")
-          .groupBy($"host", $"quotaPerRound").agg(count(lit(1)).as("n"))
-          .agg(coalesce(sum(least($"quotaPerRound".cast("long"), $"n")), lit(0L)))
-          .as[Long].head())
+      else ph("keptCount")(quotaKept.count())
     var truncatedSched: Option[DataFrame] = None
-    var deferredPersisted: Option[DataFrame] = None
     val (sched, budgetRejected) =
-      if (keptCount < 0L || keptCount <= remaining) (quotaKept, spark.emptyDataFrame)
+      if (keptCount < 0L || keptCount <= remaining) (quotaKept, None)
       else {
         val s = quotaKept
           .orderBy($"priority".desc, $"host".asc, $"urlHash".asc)
           .limit(math.min(remaining, Int.MaxValue.toLong).toInt)
           .persist(StorageLevel.MEMORY_AND_DISK)
         truncatedSched = Some(s.toDF())
-        (s.toDF(), quotaKept.join(s.select("urlHash"), Seq("urlHash"), "left_anti"))
+        (s.toDF(), Some(quotaKept.join(s.select("urlHash"), Seq("urlHash"), "left_anti")))
       }
 
     // ---- fetch (S1): salted hash repartition kills host skew (a mega-host
@@ -511,22 +577,31 @@ object CrawlEngine {
     // pacer's per-host clock is partition-local), and sorting the partition
     // by a hash interleaves hosts so one host's politeness sleeps absorb the
     // other hosts' fetch work instead of serializing behind it.
+    // The 429 answers' (host, Retry-After) pairs come back from the fetch
+    // tasks themselves (a set: a re-executed task adds the same pairs
+    // again), so the host deferral below needs no job of its own.
+    val rateLimitedHosts = spark.sparkContext
+      .collectionAccumulator[(String, Int)](s"ratelimited:$attemptsDir")
+    def noteRateLimit(res: FetchResult): FetchResult = {
+      if (res.failKind == "ratelimited") rateLimitedHosts.add((res.host, res.retryAfter))
+      res
+    }
     val fetchInput =
       if (cfg.paceWallClock)
         tasks.repartition(fetchParallelism, $"host")
           .sortWithinPartitions(pmod($"urlHash", lit(1 << 20)))
-          .mapPartitions { it => Fetcher.paced(spec, it, r) }
+          .mapPartitions { it => Fetcher.paced(spec, it, r).map(noteRateLimit) }
       else
         tasks.repartition(fetchParallelism, $"host", pmod($"urlHash", lit(16)))
-          .mapPartitions { it => it.map(t => Fetcher.fetchOne(spec, t, r)) }
+          .mapPartitions { it => it.map(t => noteRateLimit(Fetcher.fetchOne(spec, t, r))) }
     ph("fetchAndWrite")(fetchInput
       .write.mode("overwrite").option("compression", "uncompressed")
       .partitionBy("ok").parquet(attemptsDir))
 
     // every scheduled row lands in the attempts log exactly once, so the
     // footer row counts ARE the scheduled / fetched-ok counts (no job)
-    val fetchedOkCount = parquetRowCount(spark, s"$attemptsDir/ok=true")
-    val schedCount = fetchedOkCount + parquetRowCount(spark, s"$attemptsDir/ok=false")
+    val fetchedOkCount = Fs.parquetRowCount(s"$attemptsDir/ok=true")
+    val schedCount = fetchedOkCount + Fs.parquetRowCount(s"$attemptsDir/ok=false")
     val results = readAttempts(spark, Seq(attemptsDir))
     val okRes = results.where($"ok")
     val failRes = results.where(!$"ok")
@@ -536,33 +611,34 @@ object CrawlEngine {
     // after maxRetries attempts; "ratelimited" NEVER drops here (no attempt
     // consumed — ref honors Retry-After instead of retry-burning,
     // medcrawler/base.py:296-301)
-    val exhausted = failRes.where(
-      $"failKind" === "permanent" ||
+    // (one scan of both ok partitions: ok rows have an empty failKind; the
+    // robots-blocked stamps ride with the tombstones below)
+    val fetchStamps = results
+      .where($"ok" || $"failKind" === "permanent" ||
         ($"failKind" === "transient" && $"attempt" + 1 >= cfg.maxRetries))
-    val seenDelta = okRes.select($"urlHash", $"hostBucket")
-      .unionByName(exhausted.select($"urlHash", $"hostBucket"))
-      .unionByName(blockedDf.select($"urlHash", $"hostBucket"))
-      .withColumn("seenRound", lit(r))
+      .select($"urlHash", $"hostBucket", thisRound.as("seenRound"),
+        lit(null).cast("int").as("aux"))
     val seenDir = s"$outDir/seen/r$r"
 
-    // retry re-enqueue with exponential backoff (ref wait_chain,
-    // medcrawler/base.py:136-154). Re-adds are NEW frontier versions
-    // (addedSeq = r); their scheduled originals are tombstoned this round.
-    val retries = failRes
-      .where($"failKind" === "transient" && $"attempt" + 1 < cfg.maxRetries)
+    // Re-adds, from one scan of the failed attempts. Both are NEW frontier
+    // versions (addedSeq = r); their scheduled originals are tombstoned
+    // this round.
+    //  - transient: retry re-enqueue with exponential backoff (ref
+    //    wait_chain, medcrawler/base.py:136-154);
+    //  - ratelimited (429-analog): attempt counter UNCHANGED, deferred by
+    //    the server-provided Retry-After analog.
+    val transient = $"failKind" === "transient"
+    val reAdds = failRes
+      .where((transient && $"attempt" + 1 < cfg.maxRetries) ||
+        $"failKind" === "ratelimited")
       .select($"canonUrl".as("url"), $"canonUrl", $"urlHash", $"host",
         $"hostBucket", $"depth", $"priority", $"seedId", $"path",
-        ($"attempt" + 1).as("attempt"),
-        (lit(r) + least(pow(lit(2.0), ($"attempt" + 1).cast("double")), lit(8.0)))
-          .cast("int").as("notBeforeRound"), lit(r).as("addedSeq"))
-
-    // 429-analog re-enqueue: attempt counter UNCHANGED, deferred by the
-    // server-provided Retry-After analog
-    val rateLimited = failRes.where($"failKind" === "ratelimited")
-      .select($"canonUrl".as("url"), $"canonUrl", $"urlHash", $"host",
-        $"hostBucket", $"depth", $"priority", $"seedId", $"path",
-        $"attempt", (lit(r) + $"retryAfter").as("notBeforeRound"),
-        lit(r).as("addedSeq"))
+        when(transient, $"attempt" + 1).otherwise($"attempt").as("attempt"),
+        when(transient, (thisRound +
+            least(pow(lit(2.0), ($"attempt" + 1).cast("double")), lit(8.0)))
+          .cast("int"))
+          .otherwise(thisRound + $"retryAfter").as("notBeforeRound"),
+        thisRound.as("addedSeq"))
 
     // ---- OPIC outlink expansion (UDTF analog: explode; A4 seen growth) ----
     // Cash is truncated to integer fixed-point BEFORE aggregation
@@ -576,7 +652,7 @@ object CrawlEngine {
         explode($"outlinks").as("rawLink"))
       .withColumn("cashFp",
         ($"pPriority" * lit(cfg.gamma) / $"nRaw" * lit(Opic.Scale)).cast("long"))
-      .withColumn("childCanon", canonUdf($"rawLink"))
+      .withColumn("childCanon", canonCol($"rawLink"))
       .withColumn("childHash", xxhash64($"childCanon"))
 
     // ONE link-level aggregation: priority = sum of per-link cash (equals
@@ -584,7 +660,12 @@ object CrawlEngine {
     // representative parent (depth/path/seed donor) = max per-link cash,
     // tie → min parentHash. Both are map-side-combinable, so the expansion
     // costs one shuffle instead of two.
-    val perChild = links.groupBy($"childHash").agg(
+    // (childHash leads the row, so the map-side and the reduce-side sort
+    // bind the same key and share their generated classes)
+    val perChild = links
+      .select($"childHash", $"cashFp", $"parentHash", $"pDepth", $"pSeed",
+        $"pPath", $"parentCanon", $"childCanon")
+      .groupBy($"childHash").agg(
       sum($"cashFp").as("priorityFp"),
       min(struct(negate($"cashFp").as("negCash"), $"parentHash".as("ph"),
         $"pDepth".as("pDepth"), $"pSeed".as("pSeed"), $"pPath".as("pPath"),
@@ -592,7 +673,7 @@ object CrawlEngine {
       min($"childCanon").as("canonUrl"))
 
     val newEntries = perChild
-      .withColumn("host", hostUdf($"canonUrl"))
+      .withColumn("host", hostCol($"canonUrl"))
       .select(
         $"canonUrl".as("url"), $"canonUrl", $"childHash".as("urlHash"),
         $"host",
@@ -601,8 +682,8 @@ object CrawlEngine {
         ($"priorityFp".cast("double") / lit(Opic.Scale)).as("priority"),
         $"rep.pSeed".as("seedId"),
         concat($"rep.pPath", array($"rep.parentCanon")).as("path"),
-        lit(0).as("attempt"), lit(r + 1).as("notBeforeRound"),
-        lit(r).as("addedSeq"))
+        lit(0).as("attempt"), ProbeExpr.param(r + 1).as("notBeforeRound"),
+        thisRound.as("addedSeq"))
 
     // new URLs: not seen and not already in the frontier. BOTH exclusions
     // are executor-local probes over committed state — the round-2 design
@@ -644,118 +725,161 @@ object CrawlEngine {
     // budget-rejected) are not touched at all — they stay in their add
     // delta (round-2 "What's wrong #2": the monolithic rewrite was a
     // 1000× write amplification at the 10^10-frontier design point).
-    val addBase = retries.unionByName(rateLimited).unionByName(fresh)
-    val removalBase = sched
-      .select($"hostBucket", $"urlHash", $"addedSeq".as("aux"))
-      .unionByName(blockedDf
-        .select($"hostBucket", $"urlHash", $"addedSeq".as("aux")))
+    val addBase = reAdds.unionByName(fresh)
+    // decided rows leaving the frontier: scheduled ∪ robots-blocked (one
+    // scan, unless the budget cut the schedule short)
+    val leaving = if (truncatedSched.isEmpty) kept || $"blocked" else $"blocked"
 
     // 429-analog WHOLE-HOST deferral: every frontier entry of a host that
     // was rate-limited this round is pushed past its Retry-After horizon
-    // (tiny dimension → broadcast). In the delta log this touches ONLY the
-    // limited hosts' rows: their staying versions are tombstoned and
-    // re-added with the clamped notBeforeRound; the round's own add batch
-    // is clamped in place before it is written. Skipped entirely when the
-    // corpus has no rate limiting so the steady-state round plan stays
-    // minimal.
-    val (adds, removals) =
-      if (spec.rateLimitEvery <= 0) (addBase, removalBase)
+    // (tiny dimension: the fetch tasks report it, and the rows look their
+    // host up in it — the build side a broadcast join would collect, but
+    // with no join, so the plan is the same whatever the map holds). In
+    // the delta log this touches ONLY the limited hosts' rows: their
+    // staying versions (quota-rejected, budget-rejected, time-deferred)
+    // are tombstoned and re-added with the clamped notBeforeRound; the
+    // round's own add batch is clamped in place before it is written. Each
+    // writer scans the staying rows itself: the time-deferred scan is
+    // row-group-pruned and the rest is the checkpointed decision. Skipped
+    // entirely when the corpus has no rate limiting so the steady-state
+    // round plan stays minimal.
+    val (adds, decidedLeaving, otherLeaving) =
+      if (spec.rateLimitEvery <= 0) (addBase, leaving, truncatedSched.toSeq)
       else {
-        val rlHosts = failRes.where($"failKind" === "ratelimited")
-          .select($"host", (lit(r) + $"retryAfter").as("hostNotBefore"))
-          .distinct()
+        // a host answers 429 with one Retry-After per round
+        val until = rateLimitedHosts.value.asScala
+          .map { case (host, retryAfter) => host -> (r + retryAfter) }.toMap
+        val hostNotBefore =
+          ProbeExpr.hostDeferral(ProbeExpr.DeferralCfg(until))($"host")
+        val deferredNow = hostNotBefore > $"notBeforeRound"
+        val rejectedNow = !$"blocked" && !kept && deferredNow
+        val staying = (budgetRejected.toSeq :+ timeDeferred).map(_.where(deferredNow))
+        val reAdded = (decided.where(rejectedNow) +: staying)
+          .map(_.select(frontierCols.map(col): _*))
+          .reduce(_ unionByName _)
+          .withColumn("notBeforeRound", hostNotBefore)
+          .withColumn("addedSeq", thisRound)
         val addAdj = addBase
-          .join(broadcast(rlHosts), Seq("host"), "left")
           .withColumn("notBeforeRound",
-            greatest($"notBeforeRound", coalesce($"hostNotBefore", lit(0))))
+            greatest($"notBeforeRound", coalesce(hostNotBefore, lit(0))))
           .select(frontierCols.map(col): _*)
-        // staying rows of limited hosts below the horizon: replace version
-        val staying = timeDeferred
-          .unionByName(quotaRejected.select(frontierCols.map(col): _*))
-          .unionByName(
-            if (budgetRejected.isEmpty) emptyFrontier(spark)
-            else budgetRejected.select(frontierCols.map(col): _*))
-        val deferred = staying
-          .join(broadcast(rlHosts), Seq("host"), "inner")
-          .where($"hostNotBefore" > $"notBeforeRound")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        deferredPersisted = Some(deferred)
-        val adds2 = addAdj.unionByName(deferred
-          .withColumn("notBeforeRound", $"hostNotBefore".cast("int"))
-          .withColumn("addedSeq", lit(r))
-          .select(frontierCols.map(col): _*))
-        val rem2 = removalBase.unionByName(
-          deferred.select($"hostBucket", $"urlHash", $"addedSeq".as("aux")))
-        (adds2, rem2)
+        (addAdj.unionByName(reAdded), leaving || rejectedNow,
+          truncatedSched.toSeq ++ staying)
       }
+    // the round's seen stamps and tombstones, for ONE per-bucket sidecar
+    // pass: a tombstone's aux is the exact version (addedSeq) it kills, and
+    // a robots-blocked version is also stamped seen
+    val roundRows = (decided.where(decidedLeaving)
+        .withColumn("seenRound", when($"blocked", thisRound)) +:
+      otherLeaving.map(_.withColumn("seenRound", lit(null).cast("int"))))
+      .map(_.select($"urlHash", $"hostBucket", $"seenRound",
+        $"addedSeq".as("aux")))
+      .foldLeft(fetchStamps)(_ unionByName _)
     val addDir = s"$outDir/frontier/a$r"
     val addKeyDir = s"$outDir/frontier_keys/a$r"
     val remDir = s"$outDir/frontier_rem/r$r"
 
-    // ---- round tail: four INDEPENDENT output jobs (seen delta, next
-    // frontier, metrics, bloom merge) run as concurrent Spark actions —
-    // they share the materialized caches (joined/candidates/ranked) and
+    // ---- round tail: INDEPENDENT output jobs (seen delta + sidecars and
+    // tombstones, frontier adds, metrics) run as concurrent Spark actions —
+    // they share the checkpointed decision (`decided`) and
     // the attempts parquet, so overlapping them collapses their wall time
     // to the slowest one. This near-constant tail is what limits N→4N
     // scaling on a single box (the fetch stage itself scales).
     import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
+    implicit val tailContext: scala.concurrent.ExecutionContext =
+      TaskLoader.executionContext(spark)
 
     val expectedItems =
       if (cfg.bloomExpectedItems > 0) cfg.bloomExpectedItems else 1L << 16
     val bloomDirNew = s"$outDir/bloom/r$r"
 
-    val seenF = Future(ph("writeSeen") {
-      // one task per bucket -> one file per partition dir (aligned with the
-      // key-run bucketing; avoids numBuckets x numPartitions files)
-      seenDelta.repartition(cfg.numBuckets, $"hostBucket")
-        .write.mode("overwrite").partitionBy("hostBucket").parquet(seenDir)
-      parquetRowCount(spark, seenDir)
-    })
-    // exact-probe sidecar of the same delta: per-bucket sorted key runs,
+    // exact-probe sidecar of the seen delta: per-bucket sorted key runs,
     // TIERED-folded ([[tieredFold]]) — the delta lands in a small L1 run
     // (O(L1+delta) bytes/round), merged into the base run only at the
     // base/l1MergeDenom threshold, so a round never rewrites the key state.
-    // The hot seen probe is ≤ 2 binary searches (base + L1).
+    // The hot seen probe is ≤ 2 binary searches (base + L1). The Bloom
+    // prefilter gets the delta's keys in the same pass (expectedItems must
+    // be CONSTANT across rounds: sketch filters only merge at identical bit
+    // size; saturation degrades the prefilter's fpp, never correctness).
     val seenKeyDelta = s"$outDir/seen_keys/d$r"
     val seenKeyDir = s"$outDir/seen_keys/r$r"
     val seenKeyL1Dir = s"$outDir/seen_keys/l1-r$r"
-    // a round that triggers seen compaction rebuilds compact key runs from
-    // the compacted parquet, so folding here would be discarded work AND an
-    // orphan dir no manifest ever references — skip it ([[seenCompactionDue]]
-    // is the SAME predicate the compaction branch evaluates, on the same
-    // delta count)
-    val seenWillCompact = seenCompactionDue(cfg, m.seenDirs.size + 1)
-    val seenKeysF = Future(ph("writeSeenKeys") {
-      val n = KeyLog.write(seenDelta.select($"hostBucket", $"urlHash",
-        $"seenRound".as("aux")), seenKeyDelta, cfg.numBuckets)
-      val dirs =
-        if (n > 0 && !seenWillCompact)
-          tieredFold(spark, m.seenKeyDirs, Seq(seenKeyDelta), Nil,
-            seenKeyDir, seenKeyL1Dir, cfg, keepMaxAuxPerHash = true,
-            minLiveAux =
-              if (cfg.ttlRounds > 0) r - cfg.ttlRounds + 1 else Int.MinValue)
-        else m.seenKeyDirs
-      Fs.delete(seenKeyDelta) // ephemeral: superseded by fold or compaction
-      (n, dirs)
-    })
+    // compact the seen log periodically: linear delta growth would make the
+    // per-round union (and its file listing) quadratic over a long crawl --
+    // the Iceberg-compaction analog; the manifest swaps N delta dirs for one.
+    // A compacting round folds its delta straight into the compaction, so
+    // it writes no delta dir, key run or Bloom merge that the compaction
+    // would read once or delete unread.
+    val tombstones = spark.sparkContext.longAccumulator(s"tombstones:$remDir")
+    def sidecars(keyDir: String, bloomDir: String, bloomPrev: Option[String],
+        minLiveAux: Int) = RoundSidecars(keyDir, bloomDir, bloomPrev,
+      expectedItems, cfg.bloomFpp, minLiveAux, remDir, tombstones)
+    val seenF = Future(
+      if (seenCompactionDue(cfg, m.seenDirs.size + 1)) ph("compactSeen") {
+        val compactDir = s"$outDir/seen/compact-r$r"
+        val compactKeyDir = s"$outDir/seen_keys/compact-r$r"
+        // REBUILD the per-bucket Bloom prefilters from the live keys (judge
+        // r3 "What's missing #1"): the merged chain only ever accretes, so
+        // over a long TTL-churn crawl dead keys would saturate it toward
+        // fpp→1 and the prefilter would quietly stop prefiltering. The
+        // rebuilt filter's pass-rate on dead keys falls back to ~fpp.
+        val rebuiltBloom = s"$outDir/bloom/rebuild-r$r"
+        // keep the NEWEST stamp per key: with a TTL a refetched URL may
+        // appear in several deltas, and only the latest drives liveness.
+        // The PARQUET log keeps every key ever stamped (the queryable
+        // seen-set consumers and the oracle's seen set expect that); only
+        // the probe-side sidecars drop stamps already TTL-dead (they can
+        // never revive: rounds only grow). The bucket repartition clusters
+        // each key, so [[RoundSidecars.merge]] keeps the newest stamp per
+        // key inside the same pass.
+        // (compactEvery ≥ 2, so a compacting round has a committed dir.)
+        val n = writeSeen(
+          readSeen(spark, m.seenDirs).withColumn("aux", lit(null).cast("int"))
+            .unionByName(roundRows),
+          compactDir, cfg.numBuckets, sidecars(compactKeyDir, rebuiltBloom, None,
+            if (cfg.ttlRounds > 0) r - cfg.ttlRounds + 1 else Int.MinValue))
+        // seenCount between compactions is a cumulative STAMP count (with a
+        // TTL a refetched URL stamps several deltas); compaction collapses
+        // duplicates, so it re-baselines from the compacted footers — exact
+        // distinct-key count, no job
+        (Vector(compactDir), Vector(compactKeyDir), n, rebuiltBloom)
+      } else ph("writeSeen") {
+        val n = writeSeen(roundRows, seenDir, cfg.numBuckets,
+          sidecars(seenKeyDelta, bloomDirNew, Some(m.bloomDir), Int.MinValue))
+        // an empty delta (fully rate-limited round) never enters the
+        // manifest; its Bloom dir is the committed one, linked forward
+        val seenState =
+          if (n == 0) {
+            Fs.delete(seenDir)
+            (m.seenDirs, m.seenKeyDirs, m.seenCount, bloomDirNew)
+          } else (m.seenDirs :+ seenDir, ph("foldSeenKeys")(
+            tieredFold(spark, m.seenKeyDirs, Seq(seenKeyDelta), Nil,
+              seenKeyDir, seenKeyL1Dir, cfg, keepMaxAuxPerHash = true,
+              minLiveAux =
+                if (cfg.ttlRounds > 0) r - cfg.ttlRounds + 1 else Int.MinValue)),
+            m.seenCount + n, bloomDirNew)
+        Fs.delete(seenKeyDelta) // ephemeral: superseded by the fold
+        seenState
+      })
+    // the add-dir count trigger of [[frontierCompactionDue]] fires on any
+    // non-empty add delta: the compaction rebuilds the key runs from the
+    // compacted frontier, so this round's add-key run would go unread
+    val addLogWillCompact = addLogFull(cfg, m.frontierAddDirs.size + 1)
     val addsF = Future(ph("writeFrontierAdds") {
       adds.write.mode("overwrite").parquet(addDir)
       // row counts come from parquet footers (driver-side metadata read, no
       // Spark job) -- the same statistics an Iceberg manifest would carry
-      val n = parquetRowCount(spark, addDir)
+      val n = Fs.parquetRowCount(addDir)
       // membership sidecar from the just-written delta (pruned re-read —
       // cheaper than recomputing the fresh/retry pipeline)
-      if (n > 0)
+      if (n > 0 && !addLogWillCompact)
         KeyLog.write(
           spark.read.schema(frontierSchema).parquet(addDir)
             .select($"hostBucket", $"urlHash", $"addedSeq".as("aux")),
           addKeyDir, cfg.numBuckets)
       n
     })
-    val removalsF = Future(ph("writeFrontierTombstones")(
-      KeyLog.write(removals, remDir, cfg.numBuckets)))
     // frontier sidecar maintenance, tiered on BOTH sidecars: (1) the
     // round's tombstones tiered-fold into the tombstone sidecar (small L1
     // per round, base merge at the byte threshold) — a removal-heavy drain
@@ -774,7 +898,8 @@ object CrawlEngine {
     val frontierKeyL1Dir = s"$outDir/frontier_keys/l1-r$r"
     val remFoldDir = s"$outDir/frontier_rem/f$r"
     val remFoldL1Dir = s"$outDir/frontier_rem/l1-r$r"
-    val foldF = addsF.zip(removalsF).map { case (a, rm) =>
+    val foldF = addsF.zip(seenF).map { case (a, _) =>
+      val rm = tombstones.value.longValue // the seen pass wrote the run
       // same skip as the seen fold: a compacting round writes compact key
       // runs from the compacted frontier, so the per-round fold would be
       // orphaned ([[frontierCompactionDue]] is the compaction branch's
@@ -799,109 +924,57 @@ object CrawlEngine {
         }
         // this round's raw tombstone run is ephemeral once folded (never
         // committed; older manifests reference only committed fold dirs).
-        // rm == 0: the unconditional KeyLog.write above still mkdir'd an
-        // EMPTY remDir that no manifest will ever reference — remove it or
-        // a zero-tombstone round (e.g. whole-frontier backoff deferral)
-        // leaks one orphan dir per round forever
+        // rm == 0: the seen pass still mkdir'd an EMPTY remDir that no
+        // manifest will ever reference — remove it or a zero-tombstone
+        // round (e.g. whole-frontier backoff deferral) leaks one orphan dir
+        // per round forever
         if (rm == 0 || !remDirs.contains(remDir)) Fs.delete(remDir)
       }
       if (a > 0) Fs.delete(addKeyDir) // ephemeral: superseded either way
       (a, rm, keyDirs, remDirs)
     }
     // metrics (A2 analog + north-rule politeness-wait): fully distributed —
-    // a per-host aggregate over the cached candidates joined with a per-host
-    // fetch-outcome aggregate, written without ever materializing O(hosts)
-    // rows on the driver (web scale: 10^7+ hosts). Fetch-outcome hosts are
-    // always a subset of eligible hosts, so a left join is exact.
+    // ONE per-host aggregate over the decided candidates and the round's
+    // attempts, written without ever materializing O(hosts) rows on the
+    // driver (web scale: 10^7+ hosts). Fetch-outcome hosts are always a
+    // subset of eligible hosts, so the union adds no host; minIntervalMs is
+    // one policy value per host (attempt rows carry null).
     val metricsDir = s"$outDir/metrics/r$r"
     val metricsF = Future(ph("metrics") {
-      val candStats = joined.groupBy($"host").agg(
-        count(lit(1)).as("candidates"),
-        sum(when($"blocked", 1L).otherwise(0L)).as("robotsBlocked"),
-        first($"minIntervalMs").as("minIntervalMs"))
-      val outcome = results.groupBy($"host").agg(
-        sum(when($"ok", 1L).otherwise(0L)).as("okN"),
-        sum(when(!$"ok", 1L).otherwise(0L)).as("flN"))
-      candStats.join(outcome, Seq("host"), "left")
-        .select(lit(r).as("round"), $"host", $"candidates", $"minIntervalMs",
+      decided.select($"host", lit(1L).as("c"),
+          when($"blocked", 1L).otherwise(0L).as("b"), $"minIntervalMs",
+          lit(0L).as("o"), lit(0L).as("f"))
+        .unionByName(results.select($"host", lit(0L).as("c"), lit(0L).as("b"),
+          lit(null).cast("int").as("minIntervalMs"),
+          when($"ok", 1L).otherwise(0L).as("o"),
+          when(!$"ok", 1L).otherwise(0L).as("f")))
+        .groupBy($"host").agg(sum($"c").as("candidates"),
+          sum($"b").as("robotsBlocked"), max($"minIntervalMs").as("minIntervalMs"),
+          sum($"o").as("fetchedOk"), sum($"f").as("failed"))
+        .select(thisRound.as("round"), $"host", $"candidates",
           lit(0L).as("seenDropped"), $"robotsBlocked",
-          (coalesce($"okN", lit(0L)) + coalesce($"flN", lit(0L))).as("scheduled"),
-          coalesce($"okN", lit(0L)).as("fetchedOk"),
-          coalesce($"flN", lit(0L)).as("failed"))
-        .withColumn("deferred",
-          $"candidates" - $"robotsBlocked" - $"scheduled")
-        .withColumn("politenessWaitMs",
-          $"deferred" * $"minIntervalMs".cast("long"))
-        .drop("minIntervalMs")
+          ($"fetchedOk" + $"failed").as("scheduled"), $"fetchedOk", $"failed",
+          ($"candidates" - $"robotsBlocked" - $"fetchedOk" - $"failed")
+            .as("deferred"),
+          (($"candidates" - $"robotsBlocked" - $"fetchedOk" - $"failed") *
+            $"minIntervalMs".cast("long")).as("politenessWaitMs"))
         .write.mode("overwrite").parquet(metricsDir)
     })
-    // bloom merge: expectedItems must be CONSTANT across rounds (sketch
-    // bloom filters only merge at identical bit size). Sized for the crawl
-    // horizon per bucket; saturation degrades the prefilter's fpp, never
-    // correctness (the anti-join is authoritative). The merge is
-    // distributed and partition-local: delta filters merge into per-bucket
-    // FILES on the executors; the driver never holds filter bytes. An
-    // empty delta just hard-links every bucket forward.
-    val bloomF = Future(ph("bloomMerge")(
-      Bloom.mergeAndSave(seenDelta, Some(m.bloomDir), bloomDirNew,
-        expectedItems, cfg.bloomFpp)))
 
-    val seenDeltaCount = Await.result(seenF, Duration.Inf)
+    // every tail job has finished (failed or not) before the round returns
+    // or throws: no sibling keeps writing state behind a failed round
+    awaitAll(Seq(seenF, addsF, foldF, metricsF))
+    val (newSeenDirs, newSeenKeyDirs, newSeenCount, newBloomDir) =
+      Await.result(seenF, Duration.Inf)
     val (addCount, remCount, foldKeyDirs, foldRemDirs) =
       Await.result(foldF, Duration.Inf)
-    Await.result(metricsF, Duration.Inf)
-    Await.result(bloomF, Duration.Inf)
-    val (_, seenKeyDirsNew) = Await.result(seenKeysF, Duration.Inf)
 
-    joined.unpersist(); candidates.unpersist(); ranked.unpersist()
+    // a local checkpoint keeps its blocks until they are released
+    decided.queryExecution.logical match {
+      case l: LogicalRDD => org.apache.spark.graft.CheckpointBlocks.release(l.rdd)
+      case _ =>
+    }
     truncatedSched.foreach(_.unpersist())
-    deferredPersisted.foreach(_.unpersist())
-
-    // compact seen deltas periodically: linear delta growth would make the
-    // per-round union (and its file listing) quadratic over a long crawl --
-    // the Iceberg-compaction analog; the manifest swaps N delta dirs for one.
-    // Empty deltas (fully rate-limited round) never enter the manifest.
-    val (newSeenDirs, newSeenKeyDirs, newSeenCount, newBloomDir) =
-      if (seenDeltaCount == 0L) (m.seenDirs, m.seenKeyDirs, m.seenCount, bloomDirNew)
-      else if (seenCompactionDue(cfg, m.seenDirs.size + 1)) {
-        val compactDir = s"$outDir/seen/compact-r$r"
-        // keep the NEWEST stamp per key: with a TTL a refetched URL may
-        // appear in several deltas, and only the latest drives liveness.
-        // The PARQUET log keeps every key ever stamped (the queryable
-        // seen-set consumers and the oracle's seen set expect that); only
-        // the PROBE-side sidecars below drop TTL-dead stamps.
-        readSeen(spark, m.seenDirs :+ seenDir)
-          .groupBy($"urlHash", $"hostBucket")
-          .agg(max($"seenRound").as("seenRound"))
-          .repartition(cfg.numBuckets, $"hostBucket")
-          .write.mode("overwrite").partitionBy("hostBucket").parquet(compactDir)
-        // rebuild the exact-probe runs from the compacted parquet, dropping
-        // stamps already TTL-dead (they can never revive: rounds only grow)
-        val compactKeyDir = s"$outDir/seen_keys/compact-r$r"
-        val liveCompact = spark.read.schema(seenSchema)
-          .option("basePath", compactDir).parquet(compactDir)
-          .where(lit(cfg.ttlRounds <= 0) || $"seenRound" > r - cfg.ttlRounds)
-        KeyLog.write(
-          liveCompact.select($"hostBucket", $"urlHash", $"seenRound".as("aux")),
-          compactKeyDir, cfg.numBuckets)
-        // REBUILD the per-bucket Bloom prefilters from the live keys (judge
-        // r3 "What's missing #1"): the merged chain only ever accretes, so
-        // over a long TTL-churn crawl dead keys would saturate it toward
-        // fpp→1 and the prefilter would quietly stop prefiltering. The
-        // rebuilt filter's pass-rate on dead keys falls back to ~fpp.
-        // The round's merged dir was never committed — drop it.
-        val rebuiltBloom = s"$outDir/bloom/rebuild-r$r"
-        Bloom.mergeAndSave(liveCompact.select($"hostBucket", $"urlHash"),
-          None, rebuiltBloom, expectedItems, cfg.bloomFpp)
-        Fs.delete(bloomDirNew)
-        // seenCount between compactions is a cumulative STAMP count (with a
-        // TTL a refetched URL stamps several deltas); compaction collapses
-        // duplicates, so re-baseline from the compacted footers — exact
-        // distinct-key count, no job
-        (Vector(compactDir), Vector(compactKeyDir),
-          parquetRowCount(spark, compactDir), rebuiltBloom)
-      } else (m.seenDirs :+ seenDir, seenKeyDirsNew,
-        m.seenCount + seenDeltaCount, bloomDirNew)
 
     // frontier delta-log bookkeeping: append only non-empty dirs; LIVE
     // count is pure arithmetic (adds and tombstones are disjoint exact
@@ -914,7 +987,7 @@ object CrawlEngine {
     val liveCount = m.frontierCount + addCount - remCount
     val (newAddDirs, newKeyDirs, newRemDirs, newFrontierCount, newDeadCount) =
       if (frontierCompactionDue(cfg, grownAddDirs.size,
-          m.frontierDeadCount + remCount, liveCount)) {
+          m.frontierDeadCount + remCount, liveCount)) ph("compactFrontier") {
         val compactDir = s"$outDir/frontier/compact-r$r"
         // foldF skipped every fold on a compacting round, so foldRemDirs is
         // the accumulated fold run plus this round's raw tombstone run —
@@ -931,10 +1004,10 @@ object CrawlEngine {
           compactKeyDir, cfg.numBuckets)
         // this round's raw tombstone run was only needed by the compaction
         // read above and no manifest ever references it — drop it
-        // unconditionally: remCount == 0 still mkdir'd an empty dir
+        // unconditionally: with remCount == 0 the seen pass still made it
         Fs.delete(remDir)
         (Vector(compactDir), Vector(compactKeyDir), Vector.empty[String],
-          parquetRowCount(spark, compactDir), 0L)
+          Fs.parquetRowCount(compactDir), 0L)
       } else (grownAddDirs, foldKeyDirs, foldRemDirs, liveCount,
         m.frontierDeadCount + remCount)
 
@@ -961,13 +1034,33 @@ object CrawlEngine {
       buckets = cfg.numBuckets)
   }
 
-  private def emptyFrontier(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], frontierSchema)
-
-  /** Total row count of a parquet dir from file footers -- driver-side
-    * metadata only, no Spark job (Iceberg-manifest-style statistics).
+  /** Wait for EVERY future, then rethrow the first failure in argument
+    * order. `Await`ing them one by one would throw at the first failed one
+    * while its siblings keep writing state after the caller has moved on.
     */
+  private[engine] def awaitAll(fs: Seq[scala.concurrent.Future[Any]]): Unit = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
+    fs.foreach(f => Await.ready(f, Duration.Inf))
+    fs.foreach(_.value.foreach(_.get))
+  }
+
+  /** Write the seen stamps of `rows` `(urlHash, hostBucket, seenRound,
+    * aux)` as the hostBucket-partitioned parquet `dir` (one bucket per task,
+    * so one file per bucket dir), newest stamp per key; the same tasks
+    * write each bucket's sidecars ([[RoundSidecars]]). Returns the parquet
+    * row count (footers, no job).
+    */
+  private def writeSeen(rows: DataFrame, dir: String, numBuckets: Int,
+      sidecars: RoundSidecars): Long = {
+    rows.select("urlHash", "hostBucket", "seenRound", "aux")
+      .repartition(numBuckets, col("hostBucket"))
+      .mapPartitions(sidecars.merge)(Encoders.row(seenSchema))
+      .write.mode("overwrite").partitionBy("hostBucket").parquet(dir)
+    sidecars.finish()
+    Fs.parquetRowCount(dir)
+  }
+
   /** Seen-log major compaction is due when the delta-dir count reaches
     * cfg.compactEvery. ONE definition shared by the round-tail fold-skip
     * predicate and the compaction branch (ADVICE r4: textual twins of this
@@ -999,9 +1092,15 @@ object CrawlEngine {
     */
   private def frontierCompactionDue(cfg: CrawlConfig, addDirCount: Int,
       deadRows: Long, liveRows: Long): Boolean =
-    addDirCount >= cfg.compactEvery ||
+    addLogFull(cfg, addDirCount) ||
       (liveRows > 0 && deadRows > liveRows &&
         deadRows >= cfg.drainCompactMinDead)
+
+  /** The add-dir count trigger of [[frontierCompactionDue]], on its own:
+    * the round tail skips the add-key run when it already fires.
+    */
+  private def addLogFull(cfg: CrawlConfig, addDirCount: Int): Boolean =
+    addDirCount >= cfg.compactEvery
 
   /** Tiered (DRUM-style two-level) key-run fold — the per-round sidecar
     * maintenance that replaces r4's full-state rewrite (r4 verdict "What's
@@ -1041,25 +1140,6 @@ object CrawlEngine {
           cfg.numBuckets, keepMaxAuxPerHash, minLiveAux)
         Vector(baseOut)
     }
-  }
-
-  private def parquetRowCount(spark: SparkSession, dir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dir).getFileSystem(conf)
-    if (!fs.exists(new Path(dir))) return 0L
-    val it = fs.listFiles(new Path(dir), true)
-    var n = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-        try n += rd.getRecordCount finally rd.close()
-      }
-    }
-    n
   }
 }
 

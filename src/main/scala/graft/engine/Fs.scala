@@ -155,6 +155,28 @@ object Fs {
     else f.listStatus(p).iterator.filter(_.isFile).map(_.getLen).sum
   }
 
+  /** Total row count of the parquet files under `dir` (recursively) from
+    * their footers — driver-side metadata only, no Spark job (the
+    * statistics an Iceberg manifest would carry); 0 if missing.
+    */
+  def parquetRowCount(dir: String): Long = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val f = fs(dir)
+    val p = new Path(dir)
+    if (!f.exists(p)) return 0L
+    val it = f.listFiles(p, true)
+    var n = 0L
+    while (it.hasNext) {
+      val st = it.next()
+      if (st.getPath.getName.endsWith(".parquet")) {
+        val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try n += rd.getRecordCount finally rd.close()
+      }
+    }
+    n
+  }
+
   /** File names (not paths) directly under `dir`; empty if missing. */
   def list(dir: String): Vector[String] = {
     val f = fs(dir)

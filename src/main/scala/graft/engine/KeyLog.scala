@@ -2,8 +2,11 @@ package graft.engine
 
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Per-bucket sorted key runs — the EXACT membership side of the URL-seen
   * test (and the frontier tombstone log), stored like an LSM tree.
@@ -39,37 +42,51 @@ object KeyLog {
   /** Distributed per-bucket run write. `delta` must have columns
     * (hostBucket int, urlHash long, aux int); one shuffle of the DELTA only
     * (O(round), never O(state)), one run file per non-empty bucket, each
-    * published atomically. Returns the row count (via accumulator — no
-    * extra job).
+    * published atomically. Each task sorts its buckets' pairs in memory
+    * (no Sort operator: the plan is the exchange alone after the input).
+    * Returns the row count (via accumulator — no extra job).
     */
   def write(delta: DataFrame, dir: String, numBuckets: Int): Long = {
     Fs.mkdirs(dir)
     val spark = delta.sparkSession
     val acc = spark.sparkContext.longAccumulator(s"keylog:$dir")
+    // (urlHash, hostBucket, ...) is the seen pass's row layout too, so both
+    // exchanges share one generated partition-key class
     delta
-      .select(col("hostBucket").cast("int").as("hostBucket"),
-        col("urlHash").cast("long").as("urlHash"),
+      .select(col("urlHash").cast("long").as("urlHash"),
+        col("hostBucket").cast("int").as("hostBucket"),
         col("aux").cast("int").as("aux"))
       .repartition(numBuckets, col("hostBucket"))
-      .sortWithinPartitions("hostBucket", "urlHash")
       .foreachPartition { (it: Iterator[Row]) =>
-        var bucket = Int.MinValue
-        var hashes = Array.newBuilder[Long]
-        var auxes = Array.newBuilder[Int]
-        var n = 0
-        def flush(): Unit = if (n > 0) {
-          Fs.writeAtomic(runPath(dir, bucket), serialize(hashes.result(), auxes.result()))
-          hashes = Array.newBuilder[Long]; auxes = Array.newBuilder[Int]; n = 0
+        val runs = new RunBuffers
+        it.foreach(row => runs.add(row.getInt(1), row.getLong(0), row.getInt(2)))
+        runs.sorted.foreach { case (bucket, hs, as) =>
+          Fs.writeAtomic(runPath(dir, bucket), serialize(hs, as))
+          acc.add(hs.length.toLong)
         }
-        it.foreach { row =>
-          val b = row.getInt(0)
-          if (b != bucket) { flush(); bucket = b }
-          hashes += row.getLong(1); auxes += row.getInt(2); n += 1
-          acc.add(1L)
-        }
-        flush()
       }
     acc.value
+  }
+
+  /** One task's (hash, aux) pairs per bucket, handed out as runs in total
+    * (hash, aux) order, buckets ascending.
+    */
+  private[engine] final class RunBuffers {
+    private val buckets = mutable.HashMap.empty[Int,
+      (mutable.ArrayBuilder.ofLong, mutable.ArrayBuilder.ofInt)]
+
+    def add(bucket: Int, hash: Long, aux: Int): Unit = {
+      val (h, a) = buckets.getOrElseUpdate(bucket,
+        (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofInt))
+      h += hash; a += aux
+    }
+
+    def sorted: Seq[(Int, Array[Long], Array[Int])] =
+      buckets.toSeq.sortBy(_._1).map { case (b, (h, a)) =>
+        val hs = h.result(); val as = a.result()
+        val idx = order(hs, as)
+        (b, idx.map(hs), idx.map(as))
+      }
   }
 
   def serialize(hashes: Array[Long], auxes: Array[Int]): Array[Byte] = {
@@ -139,8 +156,8 @@ object KeyLog {
     val keepMax = keepMaxAuxPerHash
     val minAux = minLiveAux
     val par = math.max(1, math.min(numBuckets, spark.sparkContext.defaultParallelism))
-    spark.range(0L, numBuckets.toLong, 1L, par).foreach { bl =>
-      val b = bl.toInt
+    // a plain RDD job: no generated classes
+    spark.sparkContext.parallelize(0 until numBuckets, par).foreach { b =>
       val deltaRuns = deltas.flatMap(readRun(_, b))
       val dropRuns = drops.flatMap(readRun(_, b))
       if (deltaRuns.isEmpty && dropRuns.isEmpty) {
@@ -151,7 +168,6 @@ object KeyLog {
       } else {
         val inputs = base.flatMap(readRun(_, b)).toIndexedSeq ++ deltaRuns
         val n = inputs.map(_._1.length).sum
-        val idx = new Array[Int](n)
         val hs = new Array[Long](n)
         val as = new Array[Int](n)
         var i = 0
@@ -160,31 +176,7 @@ object KeyLog {
           System.arraycopy(a, 0, as, i, a.length)
           i += h.length
         }
-        i = 0; while (i < n) { idx(i) = i; i += 1 }
-        // total (hash, aux) order → byte-deterministic output (writeAtomic
-        // twin attempts must publish identical bytes). Hand-rolled index
-        // merge sort: a generic sortBy here allocates a boxed (Long, Int)
-        // tuple PER COMPARISON on a path that moves ~30 MB/bucket per round
-        // at the design point — tens of millions of allocations of pure GC
-        // pressure per bucket task.
-        def lt(x: Int, y: Int): Boolean =
-          hs(x) < hs(y) || (hs(x) == hs(y) && as(x) < as(y))
-        val tmp = new Array[Int](n)
-        def msort(lo: Int, hi: Int): Unit = if (hi - lo > 1) {
-          val mid = (lo + hi) >>> 1
-          msort(lo, mid); msort(mid, hi)
-          System.arraycopy(idx, lo, tmp, lo, hi - lo)
-          var a = lo; var c = mid; var o = lo
-          while (a < mid && c < hi) {
-            if (lt(tmp(c), tmp(a))) { idx(o) = tmp(c); c += 1 }
-            else { idx(o) = tmp(a); a += 1 }
-            o += 1
-          }
-          while (a < mid) { idx(o) = tmp(a); a += 1; o += 1 }
-          while (c < hi) { idx(o) = tmp(c); c += 1; o += 1 }
-        }
-        msort(0, n)
-        val sorted = idx
+        val sorted = order(hs, as)
         val outH = Array.newBuilder[Long]
         val outA = Array.newBuilder[Int]
         def dropped(h: Long, a: Int): Boolean =
@@ -210,6 +202,37 @@ object KeyLog {
         if (rh.nonEmpty) Fs.writeAtomic(runPath(out, b), serialize(rh, ra))
       }
     }
+  }
+
+  /** Indices of `(hs, as)` in total (hash, aux) order, so a run's bytes are
+    * a deterministic function of its pairs (writeAtomic twin attempts must
+    * publish identical bytes). Hand-rolled index merge sort: a generic
+    * sortBy here allocates a boxed (Long, Int) tuple PER COMPARISON on a
+    * path that moves ~30 MB/bucket per round at the design point — tens of
+    * millions of allocations of pure GC pressure per bucket task.
+    */
+  private[engine] def order(hs: Array[Long], as: Array[Int]): Array[Int] = {
+    val n = hs.length
+    val idx = new Array[Int](n)
+    var i = 0; while (i < n) { idx(i) = i; i += 1 }
+    def lt(x: Int, y: Int): Boolean =
+      hs(x) < hs(y) || (hs(x) == hs(y) && as(x) < as(y))
+    val tmp = new Array[Int](n)
+    def msort(lo: Int, hi: Int): Unit = if (hi - lo > 1) {
+      val mid = (lo + hi) >>> 1
+      msort(lo, mid); msort(mid, hi)
+      System.arraycopy(idx, lo, tmp, lo, hi - lo)
+      var a = lo; var c = mid; var o = lo
+      while (a < mid && c < hi) {
+        if (lt(tmp(c), tmp(a))) { idx(o) = tmp(c); c += 1 }
+        else { idx(o) = tmp(a); a += 1 }
+        o += 1
+      }
+      while (a < mid) { idx(o) = tmp(a); a += 1; o += 1 }
+      while (c < hi) { idx(o) = tmp(c); c += 1; o += 1 }
+    }
+    msort(0, n)
+    idx
   }
 
   /** True iff `h` has an entry in the run whose aux satisfies `live`.
@@ -259,6 +282,92 @@ object KeyLog {
       bucket: Column, hash: Column): Column =
     ProbeExpr.seenLive(ProbeExpr.SeenCfg(bloomDir, keyDirs.toIndexedSeq,
       r, ttl))(bucket, hash)
+}
+
+/** A round's per-bucket sidecars, built in the same task pass that hands
+  * the seen rows on to the seen parquet writer: the seen set's exact
+  * [[KeyLog]] run and [[Bloom]] prefilter file, and the frontier's
+  * tombstone run. The round tail and the seen compaction each read their
+  * rows ONCE for all of them.
+  *
+  * Rows are `(urlHash long, hostBucket int, seenRound int, aux int)`,
+  * hash-partitioned by bucket: a row with a seenRound is a seen stamp, a
+  * row with an aux (the frontier version's addedSeq) is a tombstone, and a
+  * robots-blocked version is both. Each (bucket, urlHash) keeps only its
+  * NEWEST stamp (a compaction's max-per-key; a delta has one stamp per
+  * key). Stamps with seenRound < `minLiveAux` (TTL-dead at every future
+  * round) reach the parquet but neither seen sidecar. A bucket with live
+  * stamps gets one key run and one Bloom file: `bloomPrev`'s bucket file
+  * with the new keys added (the same bits as merging a delta filter into
+  * it; `expectedItems` must stay constant over the crawl), or a fresh
+  * filter. Every file publishes atomically and is deterministic, so a
+  * retried task rewrites identical bytes; `tombstones` counts the
+  * tombstone pairs written.
+  */
+final case class RoundSidecars(
+    keyDir: String,
+    bloomDir: String,
+    bloomPrev: Option[String],
+    expectedItems: Long,
+    fpp: Double,
+    minLiveAux: Int,
+    tombDir: String,
+    tombstones: org.apache.spark.util.LongAccumulator) {
+
+  /** The partition's seen rows `(urlHash, seenRound, hostBucket)`, newest
+    * stamp per key, in (bucket, urlHash) order — after every bucket's
+    * sidecars are written.
+    */
+  def merge(rows: Iterator[Row]): Iterator[Row] = {
+    val stamps = new KeyLog.RunBuffers
+    val tombs = new KeyLog.RunBuffers
+    rows.foreach { row =>
+      if (!row.isNullAt(2)) stamps.add(row.getInt(1), row.getLong(0), row.getInt(2))
+      if (!row.isNullAt(3)) tombs.add(row.getInt(1), row.getLong(0), row.getInt(3))
+    }
+    tombs.sorted.foreach { case (bucket, hs, as) =>
+      Fs.writeAtomic(KeyLog.runPath(tombDir, bucket), KeyLog.serialize(hs, as))
+      tombstones.add(hs.length.toLong)
+    }
+    val newest = stamps.sorted.map { case (bucket, hs, as) =>
+      // (hash, aux) order: the last pair of each hash is its newest stamp
+      val keep = hs.indices.filter(i => i + 1 == hs.length || hs(i + 1) != hs(i))
+      val (h, a) = (keep.map(hs).toArray, keep.map(as).toArray)
+      val live = a.indices.filter(a(_) >= minLiveAux)
+      if (live.nonEmpty) write(bucket, live.map(h).toArray, live.map(a).toArray)
+      (bucket, h, a)
+    }
+    newest.iterator.flatMap { case (bucket, h, a) =>
+      h.indices.iterator.map(i => Row(h(i), a(i), bucket))
+    }
+  }
+
+  private def write(bucket: Int, hs: Array[Long], as: Array[Int]): Unit = {
+    Fs.writeAtomic(KeyLog.runPath(keyDir, bucket), KeyLog.serialize(hs, as))
+    val bf = bloomPrev.map(Bloom.bucketPath(_, bucket)).filter(Fs.exists)
+      .map(p => Bloom.deserialize(Fs.readAllBytes(p)))
+      .getOrElse(BloomFilter.create(expectedItems, fpp))
+    hs.foreach(bf.putLong)
+    Fs.writeAtomic(Bloom.bucketPath(bloomDir, bucket), Bloom.serialize(bf))
+  }
+
+  /** Driver side, after the pass: create the dirs (a pass with no row of a
+    * kind writes no file) and hard-link `bloomPrev`'s files of buckets the
+    * pass wrote no key run for (an O(numBuckets) metadata op).
+    */
+  def finish(): Unit = {
+    Fs.mkdirs(keyDir); Fs.mkdirs(bloomDir); Fs.mkdirs(tombDir)
+    bloomPrev.foreach(carryForward)
+  }
+
+  private def carryForward(d: String): Unit =
+    Fs.list(d).foreach { name =>
+      if (name.startsWith("b") && name.endsWith(".bloom")) {
+        val bucket = name.stripPrefix("b").stripSuffix(".bloom").toInt
+        if (!Fs.exists(KeyLog.runPath(keyDir, bucket)))
+          Fs.carryForward(Bloom.bucketPath(d, bucket), Bloom.bucketPath(bloomDir, bucket))
+      }
+    }
 }
 
 /** Executor-local run cache keyed by the immutable (dir, bucket) identity of

@@ -24,29 +24,6 @@ object VectorOps {
   private def emb(dir: String)(implicit s: SparkSession): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
 
-  /** Row count from parquet file footers — driver-side metadata read, no
-    * Spark job (annBits needs N before the plan is built; a count() job
-    * here would serialize a full scan ahead of the real query).
-    */
-  private def footerCount(s: SparkSession, dir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    val it = fs.listFiles(p, true)
-    var n = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-        try n += rd.getRecordCount finally rd.close()
-      }
-    }
-    n
-  }
-
   /** Embedding dimensionality of the corpus (the SynthCorpus contract all
     * of these operators share with the DuckDB twins).
     */
@@ -213,7 +190,9 @@ object VectorOps {
     implicit val s: SparkSession = spark
     import spark.implicits._
     val e = emb(dir)
-    val bits = nearDupBits(footerCount(spark, s"$dir/embeddings.parquet"))
+    // N from the parquet footers, no job: the bit count is needed before
+    // the plan is built, and a count() would scan ahead of the real query
+    val bits = nearDupBits(graft.engine.Fs.parquetRowCount(s"$dir/embeddings.parquet"))
     val tableCols = (0 until NearDupTables).map { t =>
       struct(lit(t).as("tbl"),
         (0 until bits).map(i =>
@@ -349,7 +328,7 @@ object VectorOps {
     implicit val s: SparkSession = spark
     import spark.implicits._
     val e = emb(dir)
-    val bits = annBits(footerCount(spark, s"$dir/embeddings.parquet"))
+    val bits = annBits(graft.engine.Fs.parquetRowCount(s"$dir/embeddings.parquet"))
     val tableCols = (0 until AnnTables).map { t =>
       struct(lit(t).as("tbl"),
         (0 until bits).map(i =>
@@ -583,7 +562,7 @@ object VectorOps {
     implicit val s: SparkSession = spark
     import spark.implicits._
     val e = emb(dir)
-    val n = footerCount(spark, s"$dir/embeddings.parquet")
+    val n = graft.engine.Fs.parquetRowCount(s"$dir/embeddings.parquet")
     val twoLevel = ivfK(n, kCap) == kCap
     val cr = if (twoLevel) ivfCentsRow2(e, n, kCap) else ivfCentsRow(e, n, kCap)
     // assignment: argmax cosine over the broadcast centroid array — max

@@ -404,6 +404,66 @@ class CrawlEngineSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("steady resume rounds fit the default codegen cache (compile budget)") {
+    // Spark caches generated classes in a 100-entry LRU cache (a static
+    // conf the engine cannot raise for a caller's session). A round whose
+    // generated code changes from round to round, or whose classes do not
+    // fit, recompiles them every round. Janino compiles counted around each
+    // resume call (a process-wide counter); rounds 2 and 3 must be steady.
+    // The frontier scans keep the round as a literal for parquet row-group
+    // pruning, so those few stages may compile each round.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the benchmark's deep crawl corpus
+    val deepSpec = CorpusSpec(seed = 1, numHosts = 30, pagesPerHost = 100,
+      quotaBoost = 2, rateLimitEvery = 4)
+    val seeds = deepSpec.defaultSeeds(deepSpec.numHosts)
+    // compactEvery 2: every round compacts (the benchmark's deep crawl);
+    // the default 16: every round tiered-folds its sidecars
+    val compiled = Seq(2, 16).map { compactEvery =>
+      val cfg = CrawlConfig(maxResults = Long.MaxValue, maxRounds = 1,
+        numBuckets = 4, compactEvery = compactEvery)
+      val dir = tmpDir()
+      CrawlEngine.run(spark, deepSpec, seeds, cfg, dir)
+      compactEvery -> (1 to 3).map { r =>
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val res = CrawlEngine.resume(spark, deepSpec, cfg.copy(maxRounds = r + 1), dir)
+        assert(res.rounds == r + 1 && !res.manifest.done)
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      }
+    }
+    assert(compiled.forall(_._2.drop(1).forall(_ <= 10)),
+      "classes compiled by resume rounds 1-3: " + compiled.map { case (c, n) =>
+        s"compactEvery=$c: ${n.mkString(", ")}" }.mkString("; "))
+  }
+
+  test("the eligible-frontier scan pushes the round down to parquet") {
+    // the frontier's notBeforeRound filters keep the round as a literal
+    // (not a reference-backed parameter) so row groups of far-future
+    // backoff bands are skipped by their min/max statistics
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val scans = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        qe.executedPlan.toString.linesIterator
+          .filter(l => l.contains("FileScan parquet") && l.contains("/frontier/"))
+          .foreach(scans.add(_): Unit)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val spec = CorpusSpec(numHosts = 4, pagesPerHost = 20, rateLimitEvery = 4)
+    val cfg = CrawlConfig(maxResults = 60, maxRounds = 3, numBuckets = 4)
+    spark.listenerManager.register(listener)
+    try CrawlEngine.run(spark, spec, spec.defaultSeeds(2), cfg, tmpDir())
+    finally spark.listenerManager.unregister(listener)
+    org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
+    val pushed = scans.toArray.map(_.toString).map { l =>
+      val i = l.indexOf("PushedFilters: [")
+      if (i < 0) "" else l.substring(i).takeWhile(_ != ']')
+    }
+    assert(pushed.exists(_.contains("LessThanOrEqual(notBeforeRound,")),
+      s"no frontier scan pushes notBeforeRound <= r down: ${scans.toArray.mkString(" || ")}")
+  }
+
   test("frontier delta log: per-round write bytes scale with the round") {
     // 48k-entry frontier, politeness-bounded rounds of ~20 URLs: every
     // round must write O(round) frontier bytes (add delta + tombstones),

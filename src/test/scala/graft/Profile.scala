@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.BusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
@@ -18,7 +19,9 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
   * `local[SPARK_GRAFT_CPUS]` session (default: all cores), timing each pass
   * as `graft.Bench` does (build the DataFrame, then count it). Per pass it
   * prints the wall time, the executor task-CPU from a SparkListener (steal-
-  * and clock-invariant on a burstable box) and the top stages by task-CPU,
+  * and clock-invariant on a burstable box), the generated classes Janino
+  * compiled (Spark's process-wide codegen counter: a warm pass that still
+  * compiles is thrashing the codegen cache) and the top stages by task-CPU,
   * each labelled with its job description. Per query it writes two plans
   * under `outDir`:
   *   - `<query>.formatted.txt`: the formatted plan before execution;
@@ -95,6 +98,7 @@ object Profile {
         var minCpu = Double.MaxValue
         for (pass <- 1 to passes) {
           val c0 = cpu.totalNs.get()
+          val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val t0 = System.nanoTime()
           val df = SparkEntry.queries(q)(spark, sfDir)
           val built = System.nanoTime()
@@ -107,9 +111,11 @@ object Profile {
           val wall = (built - t0 + System.nanoTime() - t1) / 1e9
           BusDrain.drain(spark.sparkContext)
           val cpuS = (cpu.totalNs.get() - c0) / 1e9
+          val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
           minWall = math.min(minWall, wall)
           minCpu = math.min(minCpu, cpuS)
-          println(f"[profile] $q pass$pass: wall $wall%.2f s cpu $cpuS%.2f s ($n rows)")
+          println(f"[profile] $q pass$pass: wall $wall%.2f s cpu $cpuS%.2f s " +
+            s"compiled $compiled classes ($n rows)")
           cpu.drainTopStages().foreach { case (sid, ns, name) =>
             println(f"[profile]   stage $sid%4d cpu ${ns / 1e9}%7.2f s  $name")
           }
