@@ -1,9 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import graft.core.{CorpusSpec, CrawlConfig, SynthCorpus}
+import graft.core.{CorpusSpec, CrawlConfig, Log, SynthCorpus, Telemetry}
 import graft.engine.CrawlEngine
 
 /** Benchmark harness. Prints ONE JSON line for the driver:
@@ -40,6 +39,8 @@ import graft.engine.CrawlEngine
   * N- and 4N-machine clusters would show.
   */
 object Bench {
+
+  private val log = Log("bench")
 
   // SPARK_GRAFT_QUOTA_BOOST widens the scheduling round (quota scales with
   // round wall-clock length); default 20 ≈ the round-1 workload so numbers
@@ -83,7 +84,8 @@ object Bench {
     * (politeness-quota-bounded schedule, real fetch + payload landing).
     * Returns (urlsScheduled, wallSeconds, taskCpuSeconds): CPU-seconds are
     * the cumulative executor task CPU over every job of the crawl, from
-    * SparkListener task metrics — invariant to the VM's clock throttling.
+    * [[Telemetry.Listener]] — invariant to the VM's clock throttling (its
+    * top stages, labelled by crawl phase, are logged at GRAFT_LOG=debug).
     */
   def crawlRound(cores: Int, scale: Int): (Long, Double, Double) = {
     // Session.CrawlLanding for the ~3.5 GB/round payload, plus no parquet
@@ -106,31 +108,8 @@ object Bench {
       new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
     localFs.setWriteChecksum(false)
     localFs.setVerifyChecksum(false)
-    val cpuNs = new AtomicLong(0)
-    // GRAFT_BENCH_STAGECPU=1: per-stage task-CPU attribution (top stages by
-    // CPU, printed after the crawl) — the diagnosis view for "where do the
-    // non-codec cpu-ms/url go"
-    val stageCpu = new ConcurrentHashMap[Int, AtomicLong]()
-    val stageName = new ConcurrentHashMap[Int, String]()
-    val wantStageCpu = sys.env.contains("GRAFT_BENCH_STAGECPU")
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          cpuNs.addAndGet(m.executorCpuTime): Unit
-          if (wantStageCpu)
-            stageCpu.computeIfAbsent(te.stageId, _ => new AtomicLong(0))
-              .addAndGet(m.executorCpuTime): Unit
-        }
-      }
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (wantStageCpu)
-          stageName.put(sc.stageInfo.stageId,
-            sc.stageInfo.name.takeWhile(_ != '\n').take(90)): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val cpu = new Telemetry.Listener
+    spark.sparkContext.addSparkListener(cpu)
     try {
       val spec = benchSpec(scale)
       val cfg = CrawlConfig(maxResults = Long.MaxValue, maxRounds = 1,
@@ -141,35 +120,21 @@ object Bench {
         CrawlEngine.synthSeeds(spark, spec), cfg, out)
       val secs = (System.nanoTime() - t0) / 1e9
       org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
-      if (wantStageCpu) {
-        import scala.jdk.CollectionConverters._
-        stageCpu.asScala.toSeq.sortBy(-_._2.get).take(10).foreach {
-          case (sid, ns) => System.err.println(
-            f"[bench]   stage $sid%4d cpu ${ns.get / 1e9}%7.1fs  " +
-              stageName.getOrDefault(sid, "?"))
-        }
+      if (log.isDebug) cpu.drainTopStages(10).foreach { case (sid, ns, name) =>
+        log.debug(f"${cores}c stage $sid%4d cpu ${ns / 1e9}%7.1fs  $name")
       }
       graft.engine.Fs.deleteLocalDir(new java.io.File(out)) // ~3.5 GB of payload per run
-      (res.totalScheduled, secs, cpuNs.get() / 1e9)
+      (res.totalScheduled, secs, cpu.totalNs.get() / 1e9)
     } finally spark.stop()
   }
 
-  /** Cumulative (stealTicks, totalTicks) from /proc/stat's aggregate cpu
-    * line; (0, 0) when unavailable (non-Linux). Steal is time the
-    * hypervisor ran OTHER tenants while this VM was runnable — the direct
-    * "box was throttled, not the engine" line item the scaling evidence
-    * needs per measurement window. Delegates to [[cpuSample]] so there is
-    * exactly one /proc/stat parser to keep correct.
+  /** %CPU stolen by the hypervisor between two [[cpuSample]]s: time it ran
+    * OTHER tenants while this VM was runnable — "the box was throttled,
+    * not the engine", per measurement window.
     */
-  def cpuStat(): (Long, Long) = {
-    val (_, steal, total) = cpuSample()
-    (steal, total)
-  }
-
-  /** %CPU stolen by the hypervisor across a measurement window. */
-  def stealPct(before: (Long, Long), after: (Long, Long)): Double = {
-    val dTotal = after._2 - before._2
-    if (dTotal <= 0) 0.0 else 100.0 * (after._1 - before._1) / dTotal
+  def stealPct(before: (Long, Long, Long), after: (Long, Long, Long)): Double = {
+    val dTotal = after._3 - before._3
+    if (dTotal <= 0) 0.0 else 100.0 * (after._2 - before._2) / dTotal
   }
 
   /** One /proc/stat aggregate sample: (busyTicks, stealTicks, totalTicks);
@@ -330,9 +295,9 @@ object Bench {
     }
     val runs = scala.collection.mutable.Map.empty[Int, List[Run]].withDefaultValue(Nil)
     def crawlPass(pass: Int): Unit = for (c <- levels) {
-      val s0 = cpuStat()
+      val s0 = cpuSample()
       val (n, wall, cpu) = crawlRound(c, scale)
-      val steal = stealPct(s0, cpuStat())
+      val steal = stealPct(s0, cpuSample())
       val raw = rawFetchFor(c, math.min(wall, 90.0), spec)
       val r = Run(pass, n, wall, cpu, raw, c, steal)
       System.err.println(

@@ -22,14 +22,6 @@ final class Log private (component: String) {
   def info(msg: => String): Unit = emit(Info, component, msg)
   def debug(msg: => String): Unit = emit(Debug, component, msg)
   def isDebug: Boolean = threshold <= Debug
-
-  /** Time a block at debug level: `log.timed("fetchAndWrite") { ... }`. */
-  def timed[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val v = f
-    debug(f"$name: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    v
-  }
 }
 
 object Log {

@@ -35,7 +35,7 @@ import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
   *                     (benchmarks use larger payloads than tests)
   * @param quotaBoost   multiplies every host's per-round quota (benchmark
   *                     knob: models longer scheduling rounds — quota =
-  *                     roundMs/minInterval scales linearly with round length)
+  *                     round length / minInterval scales linearly with it)
   * @param hubFanIn     if true, EVERY page also links to one hub URL (page
   *                     index pagesPerHost of host-0, outside the seed
   *                     enumeration) — an in-degree-skew stressor for the

@@ -110,7 +110,7 @@ case class FetchResult(
   * @param minIntervalMs politeness interval between requests to this host
   *                      (ref 340ms unkeyed PubMed / 100ms keyed + CT.gov)
   * @param quotaPerRound max URLs fetched from this host per scheduling round
-  *                      = min(roundMs/minIntervalMs, hard batch cap);
+  *                      = min(round length / minIntervalMs, batch cap);
   *                      ref caps 3/5, medcrawler/pubmed.py:299,
   *                      medcrawler/clinical_trials.py:242
   * @param robotsDisallow path prefixes denied by robots.txt
@@ -135,8 +135,6 @@ case class HostPolicy(
   *                     point and 3% fpp the total filter state is ~9 GB, so
   *                     production runs want 4096+ buckets (~2 MB each); the
   *                     default suits 10^8-scale runs, tests pin 8-16
-  * @param roundMs      nominal wall-clock length of one scheduling round,
-  *                     used to derive per-host quotas from minIntervalMs
   * @param bloomExpectedItems per-round expected items for the per-bucket
   *                     Bloom prefilter (0 = auto-size from the round);
   *                     deliberately undersizing it raises the false-positive
@@ -156,7 +154,7 @@ case class HostPolicy(
   *                     (ref: wall-clock rate limiter, medcrawler/
   *                     base.py:266-280, gated by tests/test_base.py:81-102).
   *                     Off by default — the per-round quota already models
-  *                     the same budget (quota = roundMs/minIntervalMs)
+  *                     the same budget (quota = round length / interval)
   *                     without sleeping, and results are identical either
   *                     way; enable it when the engine fronts a live server
   * @param compactEvery LSM major-compaction cadence: compact the seen
@@ -191,7 +189,6 @@ case class CrawlConfig(
     maxRetries: Int = 5,
     gamma: Double = 0.85,
     numBuckets: Int = 64,
-    roundMs: Int = 1000,
     bloomExpectedItems: Long = 0L,
     bloomFpp: Double = 0.03,
     ttlRounds: Int = 0,
@@ -207,7 +204,6 @@ case class CrawlConfig(
   require(maxRetries >= 1, s"maxRetries must be >= 1, got $maxRetries")
   require(gamma > 0 && gamma <= 1, s"gamma must be in (0, 1], got $gamma")
   require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-  require(roundMs > 0, s"roundMs must be positive, got $roundMs")
   require(bloomExpectedItems >= 0,
     s"bloomExpectedItems must be >= 0 (0 = auto), got $bloomExpectedItems")
   require(bloomFpp > 0 && bloomFpp < 1,

@@ -42,9 +42,6 @@ object Bloom {
   }
 
   def bucketPath(dir: String, bucket: Int): String = s"$dir/b$bucket.bloom"
-
-  /** Create an empty bloom-state directory (fresh crawl, round 0). */
-  def init(dir: String): Unit = Fs.mkdirs(dir)
 }
 
 /** Executor-local bucket-file cache for bloom probes: deserialize each

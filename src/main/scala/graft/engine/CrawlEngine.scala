@@ -5,12 +5,11 @@ import java.nio.file.Paths
 import scala.jdk.CollectionConverters._
 
 import graft.core._
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Spark-native crawl engine: URL frontier + fetch scheduler.
@@ -77,6 +76,9 @@ import org.apache.spark.storage.StorageLevel
   *    round uses about 60 distinct classes, so every LRU segment holds its
   *    share with high probability; the per-round `log.info` line reports
   *    `compiled=<n> classes (<ms> ms)`.
+  *
+  * Every job of a crawl is labelled with its phase ([[Telemetry.phase]]):
+  * `init seedFrontier`, then `round <r> <phase>` (`ph` in `roundPlan`).
   */
 object CrawlEngine {
 
@@ -107,22 +109,18 @@ object CrawlEngine {
       * attempts log; `bytes` pruned at the parquet scan).
       */
     def schedule(spark: SparkSession): DataFrame =
-      if (manifest.scheduleDirs.isEmpty) emptySchedule(spark)
-      else
-        CrawlEngine.readAttempts(spark, manifest.scheduleDirs)
-          .select(col("round"), col("canonUrl"), col("urlHash"), col("host"),
-            col("hostBucket"), col("priority"), col("depth"), col("attempt"))
-          .orderBy(col("round").asc, col("priority").desc, col("host").asc,
-            col("urlHash").asc)
+      readAttempts(spark, manifest.scheduleDirs)
+        .select(col("round"), col("canonUrl"), col("urlHash"), col("host"),
+          col("hostBucket"), col("priority"), col("depth"), col("attempt"))
+        .orderBy(col("round").asc, col("priority").desc, col("host").asc,
+          col("urlHash").asc)
 
     /** Fetched rows in the input_hint schema + lineage (ok attempts only;
       * the ok=true predicate prunes to the ok partition of each round's
       * attempts log — failed rows are never scanned).
       */
     def fetched(spark: SparkSession): DataFrame =
-      if (manifest.fetchedDirs.isEmpty)
-        spark.emptyDataFrame
-      else CrawlEngine.readAttempts(spark, manifest.fetchedDirs)
+      readAttempts(spark, manifest.fetchedDirs)
         .where(col("ok"))
         .select(col("canonUrl").as("image_id"), col("bytes"), col("w"),
           col("h"), col("fmt"), col("caption"), col("phash"),
@@ -134,23 +132,13 @@ object CrawlEngine {
       * stamp — the error side-output (P3) and pacing audit trail. Column
       * pruning keeps `bytes` out of any scan that doesn't select it.
       */
-    def attempts(spark: SparkSession): DataFrame =
-      if (manifest.scheduleDirs.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          CrawlEngine.attemptsSchema)
-      else CrawlEngine.readAttempts(spark, manifest.scheduleDirs)
+    def attempts(spark: SparkSession): DataFrame = readAttempts(spark, manifest.scheduleDirs)
 
-    def seen(spark: SparkSession): DataFrame =
-      if (manifest.seenDirs.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          CrawlEngine.seenSchema)
-      else CrawlEngine.readSeen(spark, manifest.seenDirs)
+    def seen(spark: SparkSession): DataFrame = readSeen(spark, manifest.seenDirs)
 
+    /** Per-(round, host) [[RoundMetrics]] rows. */
     def metrics(spark: SparkSession): DataFrame =
-      if (manifest.metricsDirs.isEmpty) spark.emptyDataFrame
-      else spark.read.parquet(manifest.metricsDirs: _*)
+      readPinned(spark, metricsSchema, manifest.metricsDirs, partitioned = false)
 
     /** Read-through point lookup (ref `get_item(s)` serving an
       * already-fetched record from the TTL cache without a network round,
@@ -168,9 +156,7 @@ object CrawlEngine {
       * of misses = seed a round with them ([[CrawlEngine.run]]).
       */
     def lookup(spark: SparkSession, urls: Seq[String]): (DataFrame, Seq[String]) = {
-      import org.apache.spark.sql.expressions.Window
       val canons = urls.map(Canon.canonicalize).distinct
-      if (manifest.fetchedDirs.isEmpty) return (fetched(spark), canons)
       val w = Window.partitionBy(col("image_id")).orderBy(col("round").desc)
       val hits = fetched(spark)
         .where(col("image_id").isin(canons: _*))
@@ -179,42 +165,45 @@ object CrawlEngine {
       val found = hits.select("image_id").collect().map(_.getString(0)).toSet
       (hits, canons.filterNot(found))
     }
-
-    private def emptySchedule(spark: SparkSession): DataFrame =
-      spark.emptyDataFrame
   }
 
-  /** Union of seen delta dirs. Each delta is hostBucket-partitioned; its own
-    * basePath keeps the partition column while avoiding conflicting-root
-    * partition inference. The schema is pinned explicitly: no per-round
-    * footer-inference job, and a delta that is EMPTY (e.g. a round where
-    * every fetch was rate-limited) reads back as an empty frame instead of
-    * failing schema inference. (At 10^10 scale, deltas would be periodically
-    * compacted per bucket; the manifest already supports swapping dirs.)
+  /** `dirs` read with the pinned `schema` (no footer-inference job); no
+    * dirs, or dirs without data files, read as an empty frame with those
+    * columns. Partitioned roots cannot share one scan's partition
+    * inference, so each `partitioned` dir is a scan with its own basePath.
     */
-  private val seenSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("urlHash",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("seenRound",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("hostBucket",
-      org.apache.spark.sql.types.IntegerType, nullable = false)))
+  private def readPinned(spark: SparkSession, schema: StructType,
+      dirs: Seq[String], partitioned: Boolean): DataFrame =
+    if (dirs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else if (!partitioned) spark.read.schema(schema).parquet(dirs: _*)
+    else dirs.map(d => spark.read.schema(schema).option("basePath", d).parquet(d))
+      .reduce(_ unionByName _)
+
+  /** Seen delta rows, each delta hostBucket-partitioned ([[readPinned]]). */
+  private val seenSchema = StructType(Seq(
+    StructField("urlHash", LongType, nullable = false),
+    StructField("seenRound", IntegerType, nullable = false),
+    StructField("hostBucket", IntegerType, nullable = false)))
 
   private[engine] def readSeen(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    dirs.map(d => spark.read.schema(seenSchema).option("basePath", d).parquet(d))
-      .reduce(_ unionByName _)
+    readPinned(spark, seenSchema, dirs, partitioned = true)
 
   /** Frontier rows on disk: FrontierEntry columns + addedSeq (the round
     * that wrote the version; -1 for the seed init). A (urlHash, addedSeq)
     * pair identifies one immutable VERSION — the tombstone log removes
     * exact pairs.
     */
-  private val frontierSchema = org.apache.spark.sql.types.StructType(
-    org.apache.spark.sql.Encoders.product[FrontierEntry].schema.fields :+
-      org.apache.spark.sql.types.StructField("addedSeq",
-        org.apache.spark.sql.types.IntegerType, nullable = false))
+  private val frontierSchema = StructType(Encoders.product[FrontierEntry]
+    .schema.fields :+ StructField("addedSeq", IntegerType, nullable = false))
 
   private val frontierCols: Seq[String] = frontierSchema.fieldNames.toSeq
+
+  /** The membership key run of the frontier parquet `dir` (aux = addedSeq). */
+  private def writeFrontierKeys(spark: SparkSession, dir: String,
+      keyDir: String, numBuckets: Int): Unit =
+    KeyLog.write(spark.read.schema(frontierSchema).parquet(dir)
+      .select(col("hostBucket"), col("urlHash"), col("addedSeq").as("aux")),
+      keyDir, numBuckets): Unit
 
   /** The host-policy dimension's rows. `host` is non-nullable, so the left
     * join infers no `isnotnull(host)` filter for the optimizer to evaluate
@@ -222,10 +211,10 @@ object CrawlEngine {
     * a generated encoder: two generated classes fewer per round.
     */
   private def policyFrame(spark: SparkSession, policies: Seq[HostPolicy]): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(
+    val schema = StructType(
       Encoders.product[HostPolicy].schema.fields.map(f =>
         if (f.name == "host") f.copy(nullable = false) else f))
-    spark.createDataFrame(policies.map(p => org.apache.spark.sql.Row(
+    spark.createDataFrame(policies.map(p => Row(
       p.host, p.minIntervalMs, p.quotaPerRound, p.robotsDisallow)).asJava, schema)
   }
 
@@ -236,30 +225,24 @@ object CrawlEngine {
     * code) does not change as the add log grows between compactions.
     */
   private[engine] def readFrontier(spark: SparkSession, m: Snapshot.Manifest): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val adds = spark.read.schema(frontierSchema).parquet(m.frontierAddDirs: _*)
     if (m.frontierRemDirs.isEmpty) adds
-    else adds.where(!KeyLog.removedPairCol(m.frontierRemDirs)(
+    else adds.where(!ProbeExpr.removedPair(ProbeExpr.RemovedCfg(m.frontierRemDirs))(
       col("hostBucket"), col("urlHash"), col("addedSeq")))
   }
 
-  /** Union of per-round attempts dirs. Each is partitioned by `ok`, so every
-    * dir needs its own basePath (multiple partitioned roots cannot share one
-    * scan's partition inference). The schema is PINNED to the FetchResult
-    * encoder schema: no footer-inference job per dir, the `ok` partition
-    * column comes back boolean directly (still partition-prunable), and a
-    * round that scheduled ZERO URLs (e.g. every frontier entry time-deferred
-    * by 429 backoff) — whose partitionBy write leaves only _SUCCESS with no
-    * data files — reads back as an empty frame instead of throwing
-    * UNABLE_TO_INFER_SCHEMA mid-crawl.
+  /** Per-round attempts rows, each dir partitioned by `ok` ([[readPinned]]):
+    * `ok` comes back boolean (partition-prunable), and a round that
+    * scheduled ZERO URLs (e.g. every frontier entry 429-deferred) reads as
+    * an empty frame instead of throwing UNABLE_TO_INFER_SCHEMA mid-crawl.
     */
-  private val attemptsSchema =
-    org.apache.spark.sql.Encoders.product[FetchResult].schema
+  private val attemptsSchema = Encoders.product[FetchResult].schema
 
   private[engine] def readAttempts(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    dirs.map(d =>
-      spark.read.schema(attemptsSchema).option("basePath", d).parquet(d))
-      .reduce(_ unionByName _)
+    readPinned(spark, attemptsSchema, dirs, partitioned = true)
+
+  /** The metrics table's columns, as the round tail writes them. */
+  private val metricsSchema = Encoders.product[RoundMetrics].schema
 
   // ---- URL functions pinned to graft.core.Canon (same code as the oracle) ----
   private val canonCol = ProbeExpr.stringFn("canonicalize", Canon.canonicalize) _
@@ -342,18 +325,15 @@ object CrawlEngine {
         typedLit(Seq.empty[String]).as("path"), lit(0).as("attempt"),
         lit(0).as("notBeforeRound"), lit(-1).as("addedSeq"))
 
-    val t0 = System.nanoTime()
     val fDir = s"$outDir/frontier/a-init"
-    frontier0.write.mode("overwrite").parquet(fDir)
     val fkDir = s"$outDir/frontier_keys/a-init"
-    KeyLog.write(
-      spark.read.schema(frontierSchema).parquet(fDir)
-        .select($"hostBucket", $"urlHash", $"addedSeq".as("aux")),
-      fkDir, cfg.numBuckets)
-    log.debug(f"seed frontier write: ${(System.nanoTime() - t0) / 1e9}%.2fs")
+    Telemetry.phase(spark.sparkContext, "init seedFrontier") {
+      frontier0.write.mode("overwrite").parquet(fDir)
+      writeFrontierKeys(spark, fDir, fkDir, cfg.numBuckets)
+    }
     val fCount = Fs.parquetRowCount(fDir)
     val bloomDir = s"$outDir/bloom/r0"
-    Bloom.init(bloomDir)
+    Fs.mkdirs(bloomDir)
     val m0 = Snapshot.Manifest(0, -1, -1, 0L,
       Vector(fDir), Vector(fkDir), Vector.empty,
       Vector.empty, Vector.empty, Vector.empty,
@@ -408,19 +388,13 @@ object CrawlEngine {
       start: Snapshot.Manifest): CrawlResult = {
     var m = start
     while (!m.done && m.round + 1 < cfg.maxRounds) {
-      // generated classes Janino compiled during the round, from Spark's
-      // process-wide codegen counters: compiles by concurrent queries of
-      // other callers in this JVM are counted too (see "Scale notes" in the
-      // class doc for what a warm round compiles)
-      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val compileNs0 = CodeGenerator.compileTime
-      m = round(spark, spec, cfg, outDir, m)
+      val (next, compiled) = Telemetry.compiled(round(spark, spec, cfg, outDir, m))
+      m = next
       Snapshot.commit(outDir, m)
       log.info(s"round ${m.round} committed (v${m.snapshotId}): " +
         s"scheduled=${m.totalScheduled} frontier=${m.frontierCount} " +
         s"seen=${m.seenCount} fetchedOk=${m.fetchedCount} done=${m.done} " +
-        s"compiled=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
-        s"classes (${(CodeGenerator.compileTime - compileNs0) / 1000000L} ms)")
+        s"compiled=${compiled.classes} classes (${compiled.ms} ms)")
       Snapshot.expire(outDir, retain = 3)
     }
     CrawlResult(outDir, m.round + 1, m.totalScheduled, m)
@@ -438,8 +412,12 @@ object CrawlEngine {
       spec: CorpusSpec,
       cfg: CrawlConfig,
       outDir: String,
-      m: Snapshot.Manifest): Snapshot.Manifest =
+      m: Snapshot.Manifest): Snapshot.Manifest = {
+    // the loader probe is a one-task job, once per session
+    Telemetry.phase(spark.sparkContext, s"round ${m.round + 1} taskLoader")(
+      TaskLoader.of(spark)): Unit
     TaskLoader.run(spark)(roundPlan(spark, spec, cfg, outDir, m))
+  }
 
   private def roundPlan(
       spark: SparkSession,
@@ -449,7 +427,9 @@ object CrawlEngine {
       m: Snapshot.Manifest): Snapshot.Manifest = {
     import spark.implicits._
     val r = m.round + 1
-    def ph[T](name: String)(f: => T): T = log.timed(s"round $r $name")(f)
+    // (a tail future labels itself inside its body: see Telemetry.phase)
+    def ph[T](name: String)(f: => T): T =
+      Telemetry.phase(spark.sparkContext, s"round $r $name")(f)
     // the round number as generated code sees it: a reference, not an
     // inlined literal, so every round compiles the same classes. Only the
     // two frontier `notBeforeRound` scan filters keep `lit(r)`, for parquet
@@ -508,7 +488,8 @@ object CrawlEngine {
     val quota = Window.partitionBy($"host", $"pb", $"ps")
       .orderBy($"priority".desc, $"urlHash".asc)
     val survivor = !$"pb" && $"rk" <= $"quotaPerRound"
-    val decided = joined
+    // (an adaptive plan runs its exchanges when it is checkpointed)
+    val decided = ph("schedule")(joined
       .withColumn("pb", coalesce($"blocked", lit(true)))
       .withColumn("ps", pmod($"urlHash", lit(quotaSalt.toLong)))
       .withColumn("rk", row_number().over(quota))
@@ -518,7 +499,7 @@ object CrawlEngine {
       .withColumn("rk", row_number().over(quota))
       // checkpointed, not cached: its readers scan rows, so none of
       // them compiles a columnar accessor or a batch-pruning predicate
-      .localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK))
     val kept = !$"pb" && $"rk" <= $"quotaPerRound"
     val quotaKept = decided.where(kept)
 
@@ -711,11 +692,11 @@ object CrawlEngine {
         s"frontier=${m.frontierKeyDirs.size} " +
         s"rem=${m.frontierRemDirs.size}): unsupported layout")
     val notSeen =
-      !KeyLog.seenLiveCol(m.bloomDir, m.seenKeyDirs, r, cfg.ttlRounds)(
-        $"hostBucket", $"urlHash")
+      !ProbeExpr.seenLive(ProbeExpr.SeenCfg(m.bloomDir, m.seenKeyDirs, r,
+        cfg.ttlRounds))($"hostBucket", $"urlHash")
     val notMember =
-      !KeyLog.memberLiveCol(m.frontierKeyDirs, m.frontierRemDirs)(
-        $"hostBucket", $"urlHash")
+      !ProbeExpr.memberLive(ProbeExpr.MemberCfg(m.frontierKeyDirs,
+        m.frontierRemDirs))($"hostBucket", $"urlHash")
     val fresh = newEntries.where(notSeen && notMember)
 
     // ---- frontier DELTA: the round writes O(round) bytes, never the
@@ -805,18 +786,20 @@ object CrawlEngine {
     val seenKeyDelta = s"$outDir/seen_keys/d$r"
     val seenKeyDir = s"$outDir/seen_keys/r$r"
     val seenKeyL1Dir = s"$outDir/seen_keys/l1-r$r"
-    // compact the seen log periodically: linear delta growth would make the
-    // per-round union (and its file listing) quadratic over a long crawl --
+    // compact the seen log every cfg.compactEvery deltas: linear growth
+    // would make the per-round union (and file listing) quadratic --
     // the Iceberg-compaction analog; the manifest swaps N delta dirs for one.
     // A compacting round folds its delta straight into the compaction, so
     // it writes no delta dir, key run or Bloom merge that the compaction
     // would read once or delete unread.
     val tombstones = spark.sparkContext.longAccumulator(s"tombstones:$remDir")
+    // seen stamps older than this are TTL-dead from the next round on
+    val oldestLiveStamp = if (cfg.ttlRounds > 0) r - cfg.ttlRounds + 1 else Int.MinValue
     def sidecars(keyDir: String, bloomDir: String, bloomPrev: Option[String],
         minLiveAux: Int) = RoundSidecars(keyDir, bloomDir, bloomPrev,
       expectedItems, cfg.bloomFpp, minLiveAux, remDir, tombstones)
     val seenF = Future(
-      if (seenCompactionDue(cfg, m.seenDirs.size + 1)) ph("compactSeen") {
+      if (m.seenDirs.size + 1 >= cfg.compactEvery) ph("compactSeen") {
         val compactDir = s"$outDir/seen/compact-r$r"
         val compactKeyDir = s"$outDir/seen_keys/compact-r$r"
         // REBUILD the per-bucket Bloom prefilters from the live keys (judge
@@ -837,8 +820,8 @@ object CrawlEngine {
         val n = writeSeen(
           readSeen(spark, m.seenDirs).withColumn("aux", lit(null).cast("int"))
             .unionByName(roundRows),
-          compactDir, cfg.numBuckets, sidecars(compactKeyDir, rebuiltBloom, None,
-            if (cfg.ttlRounds > 0) r - cfg.ttlRounds + 1 else Int.MinValue))
+          compactDir, cfg.numBuckets,
+          sidecars(compactKeyDir, rebuiltBloom, None, oldestLiveStamp))
         // seenCount between compactions is a cumulative STAMP count (with a
         // TTL a refetched URL stamps several deltas); compaction collapses
         // duplicates, so it re-baselines from the compacted footers — exact
@@ -856,8 +839,7 @@ object CrawlEngine {
           } else (m.seenDirs :+ seenDir, ph("foldSeenKeys")(
             tieredFold(spark, m.seenKeyDirs, Seq(seenKeyDelta), Nil,
               seenKeyDir, seenKeyL1Dir, cfg, keepMaxAuxPerHash = true,
-              minLiveAux =
-                if (cfg.ttlRounds > 0) r - cfg.ttlRounds + 1 else Int.MinValue)),
+              minLiveAux = oldestLiveStamp)),
             m.seenCount + n, bloomDirNew)
         Fs.delete(seenKeyDelta) // ephemeral: superseded by the fold
         seenState
@@ -874,10 +856,7 @@ object CrawlEngine {
       // membership sidecar from the just-written delta (pruned re-read —
       // cheaper than recomputing the fresh/retry pipeline)
       if (n > 0 && !addLogWillCompact)
-        KeyLog.write(
-          spark.read.schema(frontierSchema).parquet(addDir)
-            .select($"hostBucket", $"urlHash", $"addedSeq".as("aux")),
-          addKeyDir, cfg.numBuckets)
+        writeFrontierKeys(spark, addDir, addKeyDir, cfg.numBuckets)
       n
     })
     // frontier sidecar maintenance, tiered on BOTH sidecars: (1) the
@@ -902,8 +881,7 @@ object CrawlEngine {
       val rm = tombstones.value.longValue // the seen pass wrote the run
       // same skip as the seen fold: a compacting round writes compact key
       // runs from the compacted frontier, so the per-round fold would be
-      // orphaned ([[frontierCompactionDue]] is the compaction branch's
-      // predicate, on the same add-dir count)
+      // orphaned. The compaction branch below takes this answer as is.
       val willCompact = frontierCompactionDue(cfg,
         m.frontierAddDirs.size + (if (a > 0) 1 else 0),
         m.frontierDeadCount + rm, m.frontierCount + a - rm)
@@ -931,7 +909,7 @@ object CrawlEngine {
         if (rm == 0 || !remDirs.contains(remDir)) Fs.delete(remDir)
       }
       if (a > 0) Fs.delete(addKeyDir) // ephemeral: superseded either way
-      (a, rm, keyDirs, remDirs)
+      (a, rm, keyDirs, remDirs, willCompact)
     }
     // metrics (A2 analog + north-rule politeness-wait): fully distributed —
     // ONE per-host aggregate over the decided candidates and the round's
@@ -966,7 +944,7 @@ object CrawlEngine {
     awaitAll(Seq(seenF, addsF, foldF, metricsF))
     val (newSeenDirs, newSeenKeyDirs, newSeenCount, newBloomDir) =
       Await.result(seenF, Duration.Inf)
-    val (addCount, remCount, foldKeyDirs, foldRemDirs) =
+    val (addCount, remCount, foldKeyDirs, foldRemDirs, compactFrontier) =
       Await.result(foldF, Duration.Inf)
 
     // a local checkpoint keeps its blocks until they are released
@@ -981,13 +959,12 @@ object CrawlEngine {
     // versions). LSM major compaction every cfg.compactEvery add deltas
     // rewrites the live set once (amortized 1/compactEvery of the frontier
     // per round vs the round-2 design's 1× EVERY round) and clears the
-    // tombstone log.
+    // tombstone log. foldF decided whether it is due (and skipped its folds).
     val grownAddDirs =
       if (addCount > 0) m.frontierAddDirs :+ addDir else m.frontierAddDirs
     val liveCount = m.frontierCount + addCount - remCount
     val (newAddDirs, newKeyDirs, newRemDirs, newFrontierCount, newDeadCount) =
-      if (frontierCompactionDue(cfg, grownAddDirs.size,
-          m.frontierDeadCount + remCount, liveCount)) ph("compactFrontier") {
+      if (compactFrontier) ph("compactFrontier") {
         val compactDir = s"$outDir/frontier/compact-r$r"
         // foldF skipped every fold on a compacting round, so foldRemDirs is
         // the accumulated fold run plus this round's raw tombstone run —
@@ -998,10 +975,7 @@ object CrawlEngine {
         readFrontier(spark, mGrown)
           .write.mode("overwrite").parquet(compactDir)
         val compactKeyDir = s"$outDir/frontier_keys/compact-r$r"
-        KeyLog.write(
-          spark.read.schema(frontierSchema).parquet(compactDir)
-            .select($"hostBucket", $"urlHash", $"addedSeq".as("aux")),
-          compactKeyDir, cfg.numBuckets)
+        writeFrontierKeys(spark, compactDir, compactKeyDir, cfg.numBuckets)
         // this round's raw tombstone run was only needed by the compaction
         // read above and no manifest ever references it — drop it
         // unconditionally: with remCount == 0 the seen pass still made it
@@ -1061,15 +1035,6 @@ object CrawlEngine {
     Fs.parquetRowCount(dir)
   }
 
-  /** Seen-log major compaction is due when the delta-dir count reaches
-    * cfg.compactEvery. ONE definition shared by the round-tail fold-skip
-    * predicate and the compaction branch (ADVICE r4: textual twins of this
-    * threshold could drift and commit a manifest referencing a never-written
-    * key-run dir).
-    */
-  private def seenCompactionDue(cfg: CrawlConfig, deltaDirCount: Int): Boolean =
-    deltaDirCount >= cfg.compactEvery
-
   /** Frontier major compaction is due when the ADD-delta-dir count reaches
     * cfg.compactEvery (tombstone dirs no longer push the trigger: they stay
     * folded to ≤ 1 run, so their read cost is flat between compactions) —
@@ -1084,8 +1049,9 @@ object CrawlEngine {
     * while the scanned add log stays < 2× live (above the
     * cfg.drainCompactMinDead floor: tiny dead sets scan for free and are
     * not worth a rewrite). Both counts are manifest arithmetic (no footer
-    * read). Shared by the fold-skip predicate and the compaction branch,
-    * on the same inputs. liveRows > 0: the dead trigger exists to keep
+    * read). Evaluated once per round, in the round tail's fold future; the
+    * fold skip and the compaction branch both act on that one answer.
+    * liveRows > 0: the dead trigger exists to keep
     * FUTURE frontier scans cheap, and a live count of 0 marks the crawl
     * done on this very commit — rewriting the whole add log into an empty
     * compact dir that nothing will ever read is pure terminal waste.

@@ -4,7 +4,7 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -249,39 +249,6 @@ object KeyLog {
     }
     false
   }
-
-  /** `(hostBucket, urlHash, seq) → removed` probe: exact (hash, seq) pair
-    * membership in any tombstone run. Used by the frontier delta log: a
-    * removal written at round r carries the addedSeq of the exact frontier
-    * version it kills, so resolution is a pure pair lookup — no MVCC
-    * max-version scan, no shuffle. Native codegen expression
-    * ([[ProbeExpr]]): no per-row boxing or catalyst-converter round-trip.
-    */
-  def removedPairCol(remDirs: Seq[String])(
-      bucket: Column, hash: Column, seq: Column): Column =
-    ProbeExpr.removedPair(ProbeExpr.RemovedCfg(remDirs.toIndexedSeq))(
-      bucket, hash, seq)
-
-  /** `(hostBucket, urlHash) → live frontier member` probe: some add run
-    * holds a version (hash, addedSeq) that no tombstone run has removed.
-    * This is the expansion-time "pending in frontier" exclusion
-    * (RefOracle step 7's `frontier.contains`) without touching the
-    * frontier table itself.
-    */
-  def memberLiveCol(addKeyDirs: Seq[String], remDirs: Seq[String])(
-      bucket: Column, hash: Column): Column =
-    ProbeExpr.memberLive(ProbeExpr.MemberCfg(
-      addKeyDirs.toIndexedSeq, remDirs.toIndexedSeq))(bucket, hash)
-
-  /** `(hostBucket, urlHash) → live-seen` probe: Bloom prefilter (absent
-    * filter = maybe, exactness never depends on it), then exact run probes
-    * with TTL liveness at round `r` (`ttl ≤ 0` = seen-forever). All
-    * executor-local; the seen state is never scanned or shuffled.
-    */
-  def seenLiveCol(bloomDir: String, keyDirs: Seq[String], r: Int, ttl: Int)(
-      bucket: Column, hash: Column): Column =
-    ProbeExpr.seenLive(ProbeExpr.SeenCfg(bloomDir, keyDirs.toIndexedSeq,
-      r, ttl))(bucket, hash)
 }
 
 /** A round's per-bucket sidecars, built in the same task pass that hands
@@ -378,19 +345,16 @@ final case class RoundSidecars(
   * Capacity: a probe touches up to 6 (dir, bucket) keys per row under
   * the tiered layout (seen base + L1, frontier-key base + L1, tombstone
   * base + L1), so the hot working set is ~6 × the buckets THIS executor's
-  * partitions probe. The default
-  * covers 6 dirs × 4096 buckets — the single-JVM local[‖] worst case
-  * (a multi-executor cluster routes each bucket's probes to one executor,
-  * so per-executor working sets are ~buckets/executors × 5). Tune with
-  * GRAFT_KEYLOG_CACHE_ENTRIES when bucket counts or memory differ; at the
-  * 10^10 design point the binding limit is run BYTES (~30 MB/bucket), not
-  * entry count — size buckets-per-executor to fit, as model.scala's scale
-  * notes already require.
+  * partitions probe. The 24576 entries cover 6 runs × 4096 buckets — the
+  * single-JVM local[*] worst case (a multi-executor cluster routes each
+  * bucket's probes to one executor, so per-executor working sets are
+  * ~6 × buckets/executors). At the 10^10 design point the binding limit is
+  * run BYTES (~30 MB/bucket), not entry count — size buckets-per-executor
+  * to fit, as model.scala's scale notes already require.
   */
 object KeyLogCache {
   @transient private lazy val cache =
-    new LruCache[(String, Int), Option[(Array[Long], Array[Int])]](
-      sys.env.getOrElse("GRAFT_KEYLOG_CACHE_ENTRIES", "24576").toInt)
+    new LruCache[(String, Int), Option[(Array[Long], Array[Int])]](6 * 4096)
 
   def get(dir: String, bucket: Int): Option[(Array[Long], Array[Int])] =
     cache.get((dir, bucket)) { case (d, b) =>

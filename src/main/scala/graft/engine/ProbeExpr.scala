@@ -30,8 +30,9 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ProbeExpr {
 
-  /** Live-seen config: Bloom prefilter dir + exact key-run dirs + TTL
-    * liveness pinned at round `round`.
+  /** `(hostBucket, urlHash) → live-seen` probe: Bloom prefilter (absent
+    * filter = maybe), then exact key-run probes with TTL liveness at round
+    * `round` (`ttl ≤ 0` = seen-forever). The seen state is never scanned.
     */
   case class SeenCfg(bloomDir: String, keyDirs: IndexedSeq[String],
       round: Int, ttl: Int) {
@@ -50,8 +51,8 @@ object ProbeExpr {
     }
   }
 
-  /** Live-frontier-membership config: some add run holds a version no
-    * tombstone run has removed.
+  /** `(hostBucket, urlHash) → live frontier member` probe (RefOracle's
+    * `frontier.contains`): some add run holds a version no tombstone killed.
     */
   case class MemberCfg(addDirs: IndexedSeq[String], remDirs: IndexedSeq[String]) {
     def probe(b: Int, h: Long): Boolean = {
@@ -70,7 +71,10 @@ object ProbeExpr {
     }
   }
 
-  /** Exact (hash, addedSeq) tombstone-pair config. */
+  /** `(hostBucket, urlHash, addedSeq) → removed` probe: a tombstone
+    * carries the addedSeq of the exact frontier version it kills, so the
+    * delta log resolves by pair lookup — no max-version scan, no shuffle.
+    */
   case class RemovedCfg(remDirs: IndexedSeq[String]) {
     def probe(b: Int, h: Long, s: Int): Boolean = remDirs.exists { d =>
       KeyLogCache.get(d, b) match {

@@ -27,14 +27,13 @@ object Snapshot {
   /** @param frontierAddDirs append-only frontier ADD deltas (parquet,
     *                    FrontierEntry columns + addedSeq = writing round);
     *                    the live frontier = union of adds minus tombstones
-    * @param frontierKeyDirs [[KeyLog]] membership sidecars of the same adds,
-    *                    in LOCKSTEP with frontierAddDirs (aux = addedSeq)
+    * @param frontierKeyDirs [[KeyLog]] membership runs over ALL the adds
+    *                    (aux = addedSeq), tiered-folded: base + ≤ 1 L1 run
     * @param frontierRemDirs [[KeyLog]] tombstone runs — exact
-    *                    (urlHash, addedSeq) versions removed per round
+    *                    (urlHash, addedSeq) versions removed; tiered-folded
     * @param seenDirs    queryable parquet seen deltas (hostBucket-partitioned)
-    * @param seenKeyDirs [[KeyLog]] run dirs — the exact-probe sidecar of the
-    *                    same deltas, in LOCKSTEP with seenDirs (one run dir
-    *                    per non-empty delta / compaction)
+    * @param seenKeyDirs [[KeyLog]] runs — the exact-probe sidecar over ALL
+    *                    the seen deltas, tiered-folded: base + ≤ 1 L1 run
     * @param frontierCount LIVE frontier size (adds minus removals,
     *                    re-baselined exactly at compaction)
     * @param frontierDeadCount tombstoned rows still physically present in

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Telemetry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,52 +54,50 @@ object GraphOps {
     // query is ~5 s CPU. Edges stay a cheap projection over the
     // checkpointed 16-byte rows; blocks are reclaimed by the
     // ContextCleaner once the RDD is unreferenced (same reclamation story
-    // as phashNearDup's `hashes`).
-    val p0 = pairs.localCheckpoint(false)
+    // as phashNearDup's `hashes`). Under AQE the checkpoint call itself
+    // runs the pair plan's exchanges, so they carry the "cc: pairs" label.
+    val sc = s.sparkContext
+    val p0 = Telemetry.phase(sc, "cc: pairs")(pairs.localCheckpoint(false))
     val edges = p0
       .union(p0.select(col(b), col(a)))
       .toDF("src", "dst")
-    // the caller's job description comes back on every exit path, the
-    // no-fixpoint throw included
-    val sc = s.sparkContext
-    val callerDesc = sc.getLocalProperty("spark.job.description")
-    try {
-      sc.setJobDescription("cc: init labels (materialize edges)")
-      var labels = edges.select($"src".as("node")).distinct()
+    var labels = Telemetry.phase(sc, "cc: init labels (materialize edges)") {
+      edges.select($"src".as("node")).distinct()
         .select($"node", $"node".as("lbl"))
         .localCheckpoint()
-      // maxIters >= component diameter suffices; fixpoint is guaranteed
-      // (labels decrease monotonically over a finite order)
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIters) {
-        val nbrMin = edges
-          .join(labels.select($"node".as("dst"), $"lbl".as("nlbl")), Seq("dst"))
-          .groupBy($"src")
-          .agg(min($"nlbl").as("nmin"))
-          .select($"src".as("node"), $"nmin")
-        // the checkpointed pass carries BOTH the updated label and a changed
-        // flag (nmin < lbl ⇔ the old "next.lbl < old.lbl" test), so
-        // convergence detection is a limit-1 scan of the already-materialized
-        // checkpoint blocks instead of a join + full recompute per round —
-        // one fewer shuffle job per iteration across all three clustering
-        // queries (guide §2.4: remove shuffles outright)
-        sc.setJobDescription(s"cc: iter $iter propagate")
-        val next = labels.join(nbrMin, Seq("node"), "left")
+    }
+    // maxIters >= component diameter suffices; fixpoint is guaranteed
+    // (labels decrease monotonically over a finite order)
+    var iter = 0
+    var converged = false
+    while (!converged && iter < maxIters) {
+      val nbrMin = edges
+        .join(labels.select($"node".as("dst"), $"lbl".as("nlbl")), Seq("dst"))
+        .groupBy($"src")
+        .agg(min($"nlbl").as("nmin"))
+        .select($"src".as("node"), $"nmin")
+      // the checkpointed pass carries BOTH the updated label and a changed
+      // flag (nmin < lbl ⇔ the old "next.lbl < old.lbl" test), so
+      // convergence detection is a limit-1 scan of the already-materialized
+      // checkpoint blocks instead of a join + full recompute per round —
+      // one fewer shuffle job per iteration across all three clustering
+      // queries (guide §2.4: remove shuffles outright)
+      val next = Telemetry.phase(sc, s"cc: iter $iter propagate") {
+        labels.join(nbrMin, Seq("node"), "left")
           .select($"node", least($"lbl", coalesce($"nmin", $"lbl")).as("lbl"),
             (coalesce($"nmin", $"lbl") < $"lbl").as("chg"))
           .localCheckpoint()
-        sc.setJobDescription(s"cc: iter $iter converge check")
-        converged = next.where($"chg").limit(1).count() == 0L
-        labels = next.select($"node", $"lbl")
-        iter += 1
       }
-      if (!converged)
-        throw new IllegalStateException(
-          s"connectedComponents: no fixpoint in $maxIters rounds — component " +
-            "diameter exceeds the propagation bound; use star-contraction")
-      labels
-    } finally sc.setJobDescription(callerDesc)
+      converged = Telemetry.phase(sc, s"cc: iter $iter converge check")(
+        next.where($"chg").limit(1).count() == 0L)
+      labels = next.select($"node", $"lbl")
+      iter += 1
+    }
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents: no fixpoint in $maxIters rounds — component " +
+          "diameter exceeds the propagation bound; use star-contraction")
+    labels
   }
 
   /** Project component labels into the cluster-canonicalization output

@@ -25,7 +25,6 @@ class ConfigSpec extends AnyFunSuite {
     bad(CrawlConfig(gamma = 0.0))
     bad(CrawlConfig(gamma = 1.5))
     bad(CrawlConfig(numBuckets = 0))
-    bad(CrawlConfig(roundMs = 0))
     bad(CrawlConfig(bloomExpectedItems = -1))
     bad(CrawlConfig(bloomFpp = 0.0))
     bad(CrawlConfig(bloomFpp = 7.0))

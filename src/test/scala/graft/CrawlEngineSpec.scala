@@ -412,7 +412,6 @@ class CrawlEngineSpec extends AnyFunSuite {
     // resume call (a process-wide counter); rounds 2 and 3 must be steady.
     // The frontier scans keep the round as a literal for parquet row-group
     // pruning, so those few stages may compile each round.
-    import org.apache.spark.metrics.source.CodegenMetrics
     // the benchmark's deep crawl corpus
     val deepSpec = CorpusSpec(seed = 1, numHosts = 30, pagesPerHost = 100,
       quotaBoost = 2, rateLimitEvery = 4)
@@ -425,10 +424,10 @@ class CrawlEngineSpec extends AnyFunSuite {
       val dir = tmpDir()
       CrawlEngine.run(spark, deepSpec, seeds, cfg, dir)
       compactEvery -> (1 to 3).map { r =>
-        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-        val res = CrawlEngine.resume(spark, deepSpec, cfg.copy(maxRounds = r + 1), dir)
+        val (res, compiled) = Telemetry.compiled(
+          CrawlEngine.resume(spark, deepSpec, cfg.copy(maxRounds = r + 1), dir))
         assert(res.rounds == r + 1 && !res.manifest.done)
-        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        compiled.classes
       }
     }
     assert(compiled.forall(_._2.drop(1).forall(_ <= 10)),
@@ -616,5 +615,48 @@ class CrawlEngineSpec extends AnyFunSuite {
     val res = CrawlEngine.run(spark, spec, seeds, cfg, tmpDir())
     assert(engineOrder(res) == oracle.order)
     assert(engineSeen(res) == oracle.seen)
+  }
+
+  test("a crawl that fetched nothing: readers keep their columns, lookup misses") {
+    // every host answers 429 every round: nothing is fetched or seen
+    val spec = CorpusSpec(numHosts = 3, pagesPerHost = 10, rateLimitEvery = 1)
+    val cfg = CrawlConfig(maxResults = 50, maxRounds = 2, numBuckets = 4)
+    val res = CrawlEngine.run(spark, spec, spec.defaultSeeds(3), cfg, tmpDir())
+    assert(res.manifest.fetchedDirs.isEmpty && res.fetched(spark).columns.toSeq ==
+      "image_id bytes w h fmt caption phash seed_id path depth priority round".split(' ').toSeq)
+    val url = spec.pageUrl(0, 1)
+    val (hits, misses) = res.lookup(spark, Seq(url))
+    assert(hits.count() == 0L && misses == Seq(Canon.canonicalize(url)))
+    // no seeds, no round: every reader is empty, with a populated crawl's columns
+    val none = CrawlEngine.run(spark, spec, Seq.empty[Seed], cfg, tmpDir())
+    assert(none.manifest.done && none.manifest.scheduleDirs.isEmpty)
+    for ((a, b) <- Seq(none.schedule _ -> res.schedule _, none.seen _ -> res.seen _,
+        none.attempts _ -> res.attempts _, none.metrics _ -> res.metrics _))
+      assert(a(spark).count() == 0L && a(spark).columns.toSet == b(spark).columns.toSet)
+  }
+
+  test("every job of a crawl's run and resume is labelled with its phase") {
+    // with 429 deferrals, compactions (compactEvery 2) and a budget cut
+    val spec = CorpusSpec(numHosts = 6, pagesPerHost = 20, rateLimitEvery = 2)
+    val cfg = CrawlConfig(maxResults = 25, maxRounds = 2, numBuckets = 4,
+      compactEvery = 2)
+    val (dir, sc) = (tmpDir(), spark.sparkContext)
+    org.apache.spark.graft.BusDrain.drain(sc) // no earlier test's jobs
+    val jobs = new Telemetry.Listener
+    sc.addSparkListener(jobs)
+    val res =
+      try {
+        CrawlEngine.run(spark, spec, spec.defaultSeeds(2), cfg, dir)
+        CrawlEngine.resume(spark, spec, cfg.copy(maxRounds = 8), dir)
+      } finally { org.apache.spark.graft.BusDrain.drain(sc); sc.removeSparkListener(jobs) }
+    val labels = jobs.jobDescription.asScala.values.toSeq
+    val phase = """init \w+|round \d+ \w+""".r
+    assert(labels.nonEmpty && labels.forall(phase.matches),
+      "unlabelled jobs: " + labels.filterNot(phase.matches).distinct.mkString(" | "))
+    val ran = labels.map(_.split(' ').last).toSet
+    assert(Set("seedFrontier", "schedule", "keptCount", "fetchAndWrite",
+      "compactSeen", "compactFrontier", "metrics").subsetOf(ran), ran)
+    assert(res.totalScheduled == cfg.maxResults &&
+      res.attempts(spark).where("failKind = 'ratelimited'").count() > 0L)
   }
 }

@@ -12,15 +12,8 @@ object FloorDebug {
     val spark = Session.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) cpuNs.addAndGet(m.executorCpuTime): Unit
-        }
-      })
+    val cpu = new graft.core.Telemetry.Listener
+    spark.sparkContext.addSparkListener(cpu)
     def docs = spark.read.parquet(s"$dir/documents.parquet")
     def work(df: org.apache.spark.sql.DataFrame) = df
       .select($"doc_id", split(trim(regexp_replace(lower($"text"), "\\s+", " ")), " ").as("w"))
@@ -28,12 +21,12 @@ object FloorDebug {
       .groupBy($"t").agg(count(lit(1)))
     def time(name: String, df: => org.apache.spark.sql.DataFrame): Unit = {
       for (p <- 1 to 2) {
-        val c0 = cpuNs.get(); val t0 = System.nanoTime()
+        val c0 = cpu.totalNs.get(); val t0 = System.nanoTime()
         val n = df.count()
         val wall = (System.nanoTime() - t0) / 1e9
         org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
-        val cpu = (cpuNs.get() - c0) / 1e9
-        println(f"[floordbg] $name p$p: wall $wall%.2f cpu $cpu%.2f ($n rows)")
+        val cpuS = (cpu.totalNs.get() - c0) / 1e9
+        println(f"[floordbg] $name p$p: wall $wall%.2f cpu $cpuS%.2f ($n rows)")
       }
     }
     time("plain        ", work(docs))

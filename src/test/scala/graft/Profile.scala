@@ -1,15 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
-import scala.jdk.CollectionConverters._
-
+import graft.core.Telemetry
 import org.apache.spark.graft.BusDrain
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 
 /** Query profiler:
@@ -18,11 +12,11 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
   * Runs each named `SparkEntry` query `passes` times on one
   * `local[SPARK_GRAFT_CPUS]` session (default: all cores), timing each pass
   * as `graft.Bench` does (build the DataFrame, then count it). Per pass it
-  * prints the wall time, the executor task-CPU from a SparkListener (steal-
-  * and clock-invariant on a burstable box), the generated classes Janino
-  * compiled (Spark's process-wide codegen counter: a warm pass that still
-  * compiles is thrashing the codegen cache) and the top stages by task-CPU,
-  * each labelled with its job description. Per query it writes two plans
+  * prints the wall time, the executor task-CPU ([[Telemetry.Listener]]:
+  * steal- and clock-invariant on a burstable box), the generated classes
+  * Janino compiled ([[Telemetry.compiled]]: a warm pass that still compiles
+  * is thrashing the codegen cache) and the top stages by task-CPU, each
+  * labelled with its job description. Per query it writes two plans
   * under `outDir`:
   *   - `<query>.formatted.txt`: the formatted plan before execution;
   *   - `<query>.final.txt`: the final adaptive plan of the last pass's
@@ -32,43 +26,6 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
   */
 object Profile {
   private val TopStages = 10
-
-  /** Task-CPU in total and per stage; stage labels carry the job
-    * description (e.g. "cc: iter 3 propagate") plus the call site.
-    */
-  private final class CpuListener extends SparkListener {
-    val totalNs = new AtomicLong(0)
-    val stageNs = new ConcurrentHashMap[Int, AtomicLong]()
-    val stageName = new ConcurrentHashMap[Int, String]()
-
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-      Option(te.taskMetrics).foreach { m =>
-        totalNs.addAndGet(m.executorCpuTime)
-        stageNs.computeIfAbsent(te.stageId, _ => new AtomicLong(0))
-          .addAndGet(m.executorCpuTime): Unit
-      }
-
-    override def onJobStart(js: SparkListenerJobStart): Unit = {
-      val desc = Option(js.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .getOrElse("")
-      js.stageIds.foreach(sid =>
-        stageName.merge(sid, s"[job ${js.jobId} $desc] ", (a, b) => b + a): Unit)
-    }
-
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-      stageName.merge(sc.stageInfo.stageId,
-        sc.stageInfo.name.takeWhile(_ != '\n').take(120), (a, b) => a + b): Unit
-
-    /** The top stages since the last call, then forget them. */
-    def drainTopStages(): Seq[(Int, Long, String)] = {
-      val top = stageNs.asScala.toSeq.map { case (sid, ns) => (sid, ns.get) }
-        .sortBy(-_._2).take(TopStages)
-        .map { case (sid, ns) => (sid, ns, stageName.getOrDefault(sid, "?")) }
-      stageNs.clear(); stageName.clear()
-      top
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,
@@ -83,7 +40,7 @@ object Profile {
 
     val spark = Session.builder(cores).appName("graft-profile").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val cpu = new CpuListener
+    val cpu = new Telemetry.Listener
     spark.sparkContext.addSparkListener(cpu)
     Files.createDirectories(Paths.get(outDir))
     def writePlan(name: String, qe: QueryExecution): Unit =
@@ -92,31 +49,31 @@ object Profile {
       // session warm-up, so the first query's pass 1 is not also the JVM's
       SparkEntry.queries("q_topk")(spark, sfDir).count(): Unit
       BusDrain.drain(spark.sparkContext)
-      cpu.drainTopStages(): Unit
+      cpu.drainTopStages(TopStages): Unit
       for (q <- queries) {
         var minWall = Double.MaxValue
         var minCpu = Double.MaxValue
         for (pass <- 1 to passes) {
           val c0 = cpu.totalNs.get()
-          val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries(q)(spark, sfDir)
-          val built = System.nanoTime()
-          if (pass == 1) writePlan(s"$q.formatted.txt", df.queryExecution)
-          // the same plan Dataset.count() runs, kept so its final
-          // adaptive plan can be written after execution
-          val counted = df.groupBy().count()
-          val t1 = System.nanoTime()
-          val n = counted.collect().head.getLong(0)
-          val wall = (built - t0 + System.nanoTime() - t1) / 1e9
+          val ((counted, n, wall), compiled) = Telemetry.compiled {
+            val t0 = System.nanoTime()
+            val df = SparkEntry.queries(q)(spark, sfDir)
+            val built = System.nanoTime()
+            if (pass == 1) writePlan(s"$q.formatted.txt", df.queryExecution)
+            // the same plan Dataset.count() runs, kept so its final
+            // adaptive plan can be written after execution
+            val counted = df.groupBy().count()
+            val t1 = System.nanoTime()
+            val n = counted.collect().head.getLong(0)
+            (counted, n, (built - t0 + System.nanoTime() - t1) / 1e9)
+          }
           BusDrain.drain(spark.sparkContext)
           val cpuS = (cpu.totalNs.get() - c0) / 1e9
-          val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
           minWall = math.min(minWall, wall)
           minCpu = math.min(minCpu, cpuS)
           println(f"[profile] $q pass$pass: wall $wall%.2f s cpu $cpuS%.2f s " +
-            s"compiled $compiled classes ($n rows)")
-          cpu.drainTopStages().foreach { case (sid, ns, name) =>
+            s"compiled ${compiled.classes} classes ($n rows)")
+          cpu.drainTopStages(TopStages).foreach { case (sid, ns, name) =>
             println(f"[profile]   stage $sid%4d cpu ${ns / 1e9}%7.2f s  $name")
           }
           if (pass == passes) writePlan(s"$q.final.txt", counted.queryExecution)
