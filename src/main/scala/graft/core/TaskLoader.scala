@@ -1,4 +1,4 @@
-package graft.engine
+package graft.core
 
 import scala.concurrent.ExecutionContext
 
@@ -16,10 +16,24 @@ import org.apache.spark.sql.SparkSession
   * entry the tasks look up. The task loader asks the application loader
   * first, so every class resolves the same way under either.
   *
+  * Two limits hold in Spark 4.1:
+  *   - Pool threads. `SQLExecution.withThreadLocalCaptured` does not carry
+  *     the context loader, and adaptive query stages (shuffle exchanges,
+  *     result stages) submit through it. Their driver-side compile runs on
+  *     a pool thread whose loader is the one it inherited from the thread
+  *     that created it, so a block run here covers those compiles only
+  *     when the pool thread was created under it. Gains from this loader
+  *     alone are therefore uneven from run to run.
+  *   - No pinning. A thread's loader is set only inside [[run]], which
+  *     restores it on exit. A caller thread left on a session's task
+  *     loader fails once that session stops (`executor not accepting a
+  *     task`, from the stopped session's loader), so never set it
+  *     outside a scoped `run`.
+  *
   * A no-op off local mode, where executors are other JVMs with caches of
   * their own.
   */
-private[engine] object TaskLoader {
+private[graft] object TaskLoader {
   private val loaders = new java.util.WeakHashMap[SparkSession, ClassLoader]()
   @volatile private var probed: ClassLoader = _
 

@@ -19,8 +19,15 @@ object Telemetry {
   private val log = Log("phase")
   private val Description = "spark.job.description"
 
+  /** The call site of a stage that an adaptive plan submits from a pool
+    * thread (`$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:…`):
+    * it names no caller, so stage labels leave it out.
+    */
+  private val PoolSite = "withThreadLocalCaptured"
+
   /** Task-CPU (steal- and clock-invariant) in total and per stage; stage
-    * labels carry the job description and the call site.
+    * labels carry the job description and the call site (none for a pool
+    * thread's).
     */
   final class Listener extends SparkListener {
     val totalNs = new AtomicLong(0)
@@ -44,15 +51,21 @@ object Telemetry {
         stageName.merge(sid, s"[job ${js.jobId} $desc] ", (a, b) => b + a): Unit)
     }
 
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-      stageName.merge(sc.stageInfo.stageId,
-        sc.stageInfo.name.takeWhile(_ != '\n').take(120), (a, b) => a + b): Unit
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      val site = sc.stageInfo.name.takeWhile(_ != '\n').take(120)
+      if (!site.contains(PoolSite))
+        stageName.merge(sc.stageInfo.stageId, site, (a, b) => a + b): Unit
+    }
+
+    /** `[job <id> <description>] <call site>`, or "?" for an unseen stage. */
+    def stageLabel(stageId: Int): String =
+      stageName.getOrDefault(stageId, "?").trim
 
     /** The `n` top (stage id, task-CPU ns, label) since the last call. */
     def drainTopStages(n: Int): Seq[(Int, Long, String)] = {
       val top = stageNs.asScala.toSeq.map { case (sid, ns) => (sid, ns.get) }
         .sortBy(-_._2).take(n)
-        .map { case (sid, ns) => (sid, ns, stageName.getOrDefault(sid, "?")) }
+        .map { case (sid, ns) => (sid, ns, stageLabel(sid)) }
       stageNs.clear(); stageName.clear()
       top
     }

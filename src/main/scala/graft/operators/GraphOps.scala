@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Telemetry
+import graft.core.{TaskLoader, Telemetry}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,8 +37,20 @@ object GraphOps {
     * plan. The edge list is |near-dup pairs|, orders of magnitude under
     * corpus size, so each round's shuffle is small even at 100 TB of
     * documents.
+    *
+    * Runs under the local-mode task classloader ([[TaskLoader]]): the pair
+    * checkpoint (and the pair builders it triggers), the label init and
+    * every iteration compile each whole-stage class into one codegen-cache
+    * entry instead of two, so a warm pass finds its classes cached.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
+    val s = pairs.sparkSession
+    // the loader probe is a one-task job, once per session
+    Telemetry.phase(s.sparkContext, "cc: taskLoader")(TaskLoader.of(s)): Unit
+    TaskLoader.run(s)(propagate(pairs, maxIters))
+  }
+
+  private def propagate(pairs: DataFrame, maxIters: Int): DataFrame = {
     val s = pairs.sparkSession
     import s.implicits._
     val Seq(a, b) = pairs.columns.toSeq

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Shared scan-side helpers for the operator library. */
 object ScanOps {
@@ -29,6 +31,19 @@ object ScanOps {
     */
   private[operators] def parallelismFloor(df: DataFrame): DataFrame = {
     val floor = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < floor) df.repartition(floor) else df
+    if (scanSplits(df) < floor) df.repartition(floor) else df
+  }
+
+  /** The split count of `df`'s file scan, read from its physical plan: no
+    * deserializer, no throwaway plan, no job. `df` must be a file scan
+    * with narrow operators on top; anything else is rejected, since a
+    * plan with an exchange has no single split count to read.
+    */
+  private def scanSplits(df: DataFrame): Int = {
+    val plan = df.queryExecution.executedPlan
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    require(scans.size == 1 && plan.collectFirst { case e: Exchange => e }.isEmpty,
+      s"parallelismFloor takes one file scan without exchanges:\n$plan")
+    scans.head.inputRDD.getNumPartitions
   }
 }

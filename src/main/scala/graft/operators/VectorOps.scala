@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.VectorExpr.{dot, norm2}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -7,10 +8,10 @@ import org.apache.spark.sql.functions._
 /** Embedding-similarity operators over the `embeddings` table
   * (vec_id: long, embedding: array<float> 64-dim, label: int).
   *
-  * Cosine similarity is computed in DOUBLE with a pinned left-fold over the
-  * element index (Catalyst `aggregate` over `zip_with`), then rounded to 6
-  * decimals; ranking happens on the ROUNDED value with vec_id tie-break, so
-  * Spark and the DuckDB oracle order identically.
+  * Cosine similarity is computed in DOUBLE by the native kernels of
+  * [[VectorExpr]] (a left fold over the element index, any length), then
+  * rounded to 6 decimals; ranking happens on the ROUNDED value with vec_id
+  * tie-break, so Spark and the DuckDB oracle order identically.
   *
   * Scale notes: brute-force KNN is the correctness baseline (cross join =
   * |Q|·|N| — fine for a bounded query set, never for all-pairs at 10^10).
@@ -24,64 +25,21 @@ object VectorOps {
   private def emb(dir: String)(implicit s: SparkSession): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
 
-  /** Embedding dimensionality of the corpus (the SynthCorpus contract all
-    * of these operators share with the DuckDB twins).
+  /** sqrt(norm2) — the per-VECTOR factor of the cosine denominator.
+    * Precomputing it once per vector (instead of once per PAIR inside the
+    * cosine) removes two of the three folds from every verify-join row;
+    * `na * nb` multiplies the same two sqrt values the inline form did, so
+    * the quotient is bit-identical.
     */
-  private val Dim = 64
+  private def norm(a: Column): Column = sqrt(norm2(a))
 
-  /** dot(a,b) folded left over the element index, all in double — the
-    * general-arity form. Higher-order functions (`aggregate`/`zip_with`)
-    * are CodegenFallback in Spark: every element costs an interpreted
-    * lambda round-trip plus an intermediate array allocation, which made
-    * this THE hot instruction of every embedding query (guide §1.2 step 2:
-    * per-task work). Kept as the fallback arm of [[dotStr]].
+  /** Rounded cosine with PRECOMPUTED norms `na`, `nb` (columns or lambda
+    * fields holding [[norm]] of `a`/`b`).
     */
-  private def dotFoldStr(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> cast(x as double) * cast(y as double)), cast(0 as double), (acc, v) -> acc + v)"
+  private def sim(a: Column, b: Column, na: Column, nb: Column): Column =
+    round(dot(a, b) / (na * nb), 6)
 
-  private def norm2FoldStr(a: String): String =
-    s"aggregate($a, cast(0 as double), (acc, v) -> acc + cast(v as double) * cast(v as double))"
-
-  /** dot(a,b) UNROLLED over the fixed 64-dim layout: a pure chain of
-    * GetArrayItem/Multiply/Add nodes — whole-stage-codegen-friendly, no
-    * lambda dispatch, no intermediate array. The chain seeds with
-    * `cast(0 as double)` and adds terms left-to-right, i.e. the EXACT
-    * IEEE-754 evaluation order of the fold it replaces, so every sim/norm
-    * double (and the oracle hash) is bit-identical. Any non-64-dim input
-    * takes the original fold arm, keeping the operator's domain unchanged
-    * (mismatched zip_with lengths yielded null; so does `IF`'s fold arm).
-    */
-  private def dotStr(a: String, b: String): String = {
-    val terms = (0 until Dim)
-      .map(i => s"(cast($a[$i] as double) * cast($b[$i] as double))")
-      .mkString("cast(0 as double) + ", " + ", "")
-    s"IF(size($a) = $Dim AND size($b) = $Dim, $terms, ${dotFoldStr(a, b)})"
-  }
-
-  private def norm2Str(a: String): String = {
-    val terms = (0 until Dim)
-      .map(i => s"(cast($a[$i] as double) * cast($a[$i] as double))")
-      .mkString("cast(0 as double) + ", " + ", "")
-    s"IF(size($a) = $Dim, $terms, ${norm2FoldStr(a)})"
-  }
-
-  /** sqrt(norm2) as a string — the per-VECTOR factor of the cosine
-    * denominator. Precomputing it once per vector (instead of once per
-    * PAIR inside the cosine) removes two of the three 64-element folds
-    * from every verify-join row; `na * nb` multiplies the same two sqrt
-    * values the inline form did, so the quotient is bit-identical.
-    */
-  private def normStr(a: String): String = s"sqrt(${norm2Str(a)})"
-
-  /** Rounded cosine with PRECOMPUTED norms (`na`, `nb` name columns or
-    * lambda fields holding [[normStr]] of `a`/`b`) — usable inside
-    * higher-order lambdas (the IVF assignment fold) like the inline
-    * cosine string it replaces.
-    */
-  private def simStr(a: String, b: String, na: String, nb: String): String =
-    s"round(${dotStr(a, b)} / ($na * $nb), 6)"
-
-  /** DuckDB twin of [[cosine]]: list comprehension + list_sum in double. */
+  /** DuckDB twin of [[sim]] (norms inline): list comprehension + list_sum in double. */
   private def cosineSql(a: String, b: String): String =
     s"""round(list_sum([$a[i]::DOUBLE * $b[i]::DOUBLE FOR i IN generate_series(1, len($a))])
        | / (sqrt(list_sum([$a[i]::DOUBLE * $a[i]::DOUBLE FOR i IN generate_series(1, len($a))]))
@@ -97,14 +55,14 @@ object VectorOps {
     val e = emb(dir)
     val q = e.where($"vec_id" < 20)
       .select($"vec_id".as("query_id"), $"embedding".as("qe"),
-        expr(normStr("embedding")).as("qn"))
+        norm($"embedding").as("qn"))
     val c = e.select($"vec_id".as("neighbor_id"), $"embedding".as("ce"),
-      expr(normStr("embedding")).as("cn"))
+      norm($"embedding").as("cn"))
     val w = Window.partitionBy($"query_id")
       .orderBy($"sim".desc, $"neighbor_id".asc)
     q.crossJoin(c)
       .where($"query_id" =!= $"neighbor_id")
-      .withColumn("sim", expr(simStr("qe", "ce", "qn", "cn")))
+      .withColumn("sim", sim($"qe", $"ce", $"qn", $"cn"))
       .withColumn("rank", row_number().over(w))
       .where($"rank" <= 5)
       .select($"query_id", $"neighbor_id", $"sim", $"rank")
@@ -130,12 +88,12 @@ object VectorOps {
     implicit val s: SparkSession = spark
     import spark.implicits._
     val a = emb(dir).select($"vec_id".as("vec_a"), $"embedding".as("ea"),
-      expr(normStr("embedding")).as("na"))
+      norm($"embedding").as("na"))
     val b = emb(dir).select($"vec_id".as("vec_b"), $"embedding".as("eb"),
-      expr(normStr("embedding")).as("nb"))
+      norm($"embedding").as("nb"))
     a.crossJoin(b)
       .where($"vec_a" < $"vec_b")
-      .withColumn("sim", expr(simStr("ea", "eb", "na", "nb")))
+      .withColumn("sim", sim($"ea", $"eb", $"na", $"nb"))
       .where($"sim" >= 0.4)
       .select($"vec_a", $"vec_b", $"sim")
       .orderBy($"vec_a", $"vec_b")
@@ -224,10 +182,10 @@ object VectorOps {
     val e = emb(dir)
     nearDupCandidates(spark, dir)
       .join(e.select($"vec_id".as("vec_a"), $"embedding".as("ea"),
-        expr(normStr("embedding")).as("na")), Seq("vec_a"))
+        norm($"embedding").as("na")), Seq("vec_a"))
       .join(e.select($"vec_id".as("vec_b"), $"embedding".as("eb"),
-        expr(normStr("embedding")).as("nb")), Seq("vec_b"))
-      .withColumn("sim", expr(simStr("ea", "eb", "na", "nb")))
+        norm($"embedding").as("nb")), Seq("vec_b"))
+      .withColumn("sim", sim($"ea", $"eb", $"na", $"nb"))
       .where($"sim" >= NearDupThreshold)
       .select($"vec_a", $"vec_b", $"sim")
   }
@@ -359,10 +317,10 @@ object VectorOps {
       .orderBy($"sim".desc, $"neighbor_id".asc)
     annCandidates(spark, dir)
       .join(e.select($"vec_id".as("query_id"), $"embedding".as("qe"),
-        expr(normStr("embedding")).as("qn")), Seq("query_id"))
+        norm($"embedding").as("qn")), Seq("query_id"))
       .join(e.select($"vec_id".as("neighbor_id"), $"embedding".as("ce"),
-        expr(normStr("embedding")).as("cn")), Seq("neighbor_id"))
-      .withColumn("sim", expr(simStr("qe", "ce", "qn", "cn")))
+        norm($"embedding").as("cn")), Seq("neighbor_id"))
+      .withColumn("sim", sim($"qe", $"ce", $"qn", $"cn"))
       .withColumn("rank", row_number().over(w))
       .where($"rank" <= 3)
       .select($"query_id", $"neighbor_id", $"sim", $"rank")
@@ -480,25 +438,39 @@ object VectorOps {
     // oracle could not catch it). Fall back to the min-vec_id row as the
     // single centroid — same conditional-collect scan, no extra job.
     // structs carry 'cn' = sqrt(norm2(cv)) precomputed ONCE per centroid:
-    // every downstream assignment/probe cosine then pays one unrolled dot
-    // instead of three 64-element folds (array_sort still orders by the
+    // every downstream assignment/probe cosine then pays one dot instead
+    // of a dot and two norms (array_sort still orders by the
     // leading unique cid, so the centroid order is unchanged). The norm is
     // computed only for SAMPLED rows (inside the when) and, for the
     // fallback row, once in the degenerate CASE arm — never per corpus row
     // (collect_list/min_by force ObjectHashAggregate, which does not
-    // codegen, so a per-row norm chain here would run interpreted N times)
+    // codegen, so a per-row norm here would run interpreted N times)
     e.agg(
         array_sort(collect_list(when(expr(ivfHashSpark) % step === 0,
           struct(col("vec_id").as("cid"), col("embedding").as("cv"),
-            expr(normStr("embedding")).as("cn")))))
+            norm(col("embedding")).as("cn")))))
           .as("cents0"),
         min_by(struct(col("vec_id").as("cid"), col("embedding").as("cv")),
           col("vec_id")).as("fb"))
-      .select(expr("CASE WHEN size(cents0) = 0 THEN " +
-        "array(named_struct('cid', fb.cid, 'cv', fb.cv, " +
-        s"'cn', ${normStr("fb.cv")})) " +
-        "ELSE cents0 END").as("cents"))
+      .select(orFallback(col("cents0")).as("cents"))
   }
+
+  /** `cents` unless the hash-stride sample is empty, else the one
+    * fallback centroid `fb` with its norm (the empty-sample guard).
+    */
+  private def orFallback(cents: Column): Column =
+    when(size(cents) === 0, array(struct(col("fb.cid").as("cid"),
+      col("fb.cv").as("cv"), norm(col("fb.cv")).as("cn"))))
+      .otherwise(cents)
+
+  /** The id field `id` of the element of `cells` nearest vector `v` (norm
+    * `vn`) by rounded cosine, min id on ties: the max struct (sim, -id),
+    * a pure projection over the array.
+    */
+  private def nearest(cells: Column, id: String, cv: String, cn: String,
+      v: Column, vn: Column): Column =
+    -array_max(transform(cells, c =>
+      struct(sim(v, c(cv), vn, c(cn)).as("s"), (-c(id)).as("c"))))("c")
 
   /** Two-level variant of [[ivfCentsRow]] (active at K = kCap): ONE
     * broadcast row with `cents` = cid-sorted (cid, cv, sid) — sid the
@@ -528,27 +500,21 @@ object VectorOps {
     e.agg(
         array_sort(collect_list(when(expr(ivfHashSpark) % step === 0,
           struct(col("vec_id").as("cid"), col("embedding").as("cv"),
-            expr(normStr("embedding")).as("cn")))))
+            norm(col("embedding")).as("cn")))))
           .as("cents00"),
         array_sort(collect_list(when(expr(ivfHashSpark) % step2 === 0,
           struct(col("vec_id").as("sid"), col("embedding").as("sv"),
-            expr(normStr("embedding")).as("sn")))))
+            norm(col("embedding")).as("sn")))))
           .as("supers0"),
         min_by(struct(col("vec_id").as("cid"), col("embedding").as("cv")),
           col("vec_id")).as("fb"))
-      .select(expr("CASE WHEN size(cents00) = 0 THEN " +
-        "array(named_struct('cid', fb.cid, 'cv', fb.cv, " +
-        s"'cn', ${normStr("fb.cv")})) " +
-        "ELSE cents00 END").as("cents0"), col("supers0"))
-      .select(expr(
-        "CASE WHEN size(supers0) = 0 THEN transform(cents0, " +
-          "c -> named_struct('sid', c.cid, 'sv', c.cv, 'sn', c.cn)) " +
-          "ELSE supers0 END")
-        .as("supers"), col("cents0"))
-      .select(expr(
-        "transform(cents0, c -> named_struct('cid', c.cid, 'cv', c.cv, " +
-          "'cn', c.cn, " +
-          s"'sid', -(array_max(transform(supers, s -> named_struct('s', ${simStr("c.cv", "s.sv", "c.cn", "s.sn")}, 'c', -s.sid))).c)))")
+      .select(orFallback(col("cents00")).as("cents0"), col("supers0"))
+      .select(when(size(col("supers0")) === 0, transform(col("cents0"), c =>
+          struct(c("cid").as("sid"), c("cv").as("sv"), c("cn").as("sn"))))
+        .otherwise(col("supers0")).as("supers"), col("cents0"))
+      .select(transform(col("cents0"), c =>
+          struct(c("cid").as("cid"), c("cv").as("cv"), c("cn").as("cn"),
+            nearest(col("supers"), "sid", "sv", "sn", c("cv"), c("cn")).as("sid")))
         .as("cents"),
         col("supers"))
   }
@@ -573,27 +539,28 @@ object VectorOps {
     // once per centroid inside every lambda (K-fold fewer norm folds)
     val assign =
       if (twoLevel)
-        e.withColumn("en", expr(normStr("embedding")))
+        e.withColumn("en", norm($"embedding"))
           .crossJoin(broadcast(cr))
-          .withColumn("vsid", expr(
-            s"-(array_max(transform(supers, s -> named_struct('s', ${simStr("embedding", "s.sv", "en", "s.sn")}, 'c', -s.sid))).c)"))
-          .select($"vec_id".as("neighbor_id"), expr(
-            s"-(array_max(transform(filter(cents, c -> c.sid = vsid OR c.cid = vsid), c -> named_struct('s', ${simStr("embedding", "c.cv", "en", "c.cn")}, 'c', -c.cid))).c)")
-            .as("cell"))
+          .withColumn("vsid",
+            nearest($"supers", "sid", "sv", "sn", $"embedding", $"en"))
+          .select($"vec_id".as("neighbor_id"), nearest(
+            filter($"cents", c => c("sid") === $"vsid" || c("cid") === $"vsid"),
+            "cid", "cv", "cn", $"embedding", $"en").as("cell"))
       else
-        e.withColumn("en", expr(normStr("embedding")))
+        e.withColumn("en", norm($"embedding"))
           .crossJoin(broadcast(cr))
-          .select($"vec_id".as("neighbor_id"), expr(
-            s"-(array_max(transform(cents, ct -> named_struct('s', ${simStr("embedding", "ct.cv", "en", "ct.cn")}, 'c', -ct.cid))).c)")
-            .as("cell"))
+          .select($"vec_id".as("neighbor_id"),
+            nearest($"cents", "cid", "cv", "cn", $"embedding", $"en").as("cell"))
     // query side (bounded set): nprobe nearest cells via sorted (-sim, cid)
     // — FLAT over all K cells in both regimes (O(|Q|·K) is cheap; flat
     // probing keeps query recall independent of super-cell boundaries)
     val probes = e.where($"vec_id" < 50)
-      .withColumn("en", expr(normStr("embedding")))
+      .withColumn("en", norm($"embedding"))
       .crossJoin(broadcast(cr))
-      .select($"vec_id".as("query_id"), explode(expr(
-        s"transform(slice(array_sort(transform(cents, ct -> named_struct('ns', -${simStr("embedding", "ct.cv", "en", "ct.cn")}, 'c', ct.cid))), 1, $AnnIvfProbe), p -> p.c)"))
+      .select($"vec_id".as("query_id"), explode(transform(slice(array_sort(
+          transform($"cents", ct => struct(
+            (-sim($"embedding", ct("cv"), $"en", ct("cn"))).as("ns"),
+            ct("cid").as("c")))), 1, AnnIvfProbe), p => p("c")))
         .as("cell"))
     probes.join(assign, Seq("cell"))
       .where($"query_id" =!= $"neighbor_id")
@@ -610,10 +577,10 @@ object VectorOps {
       .orderBy($"sim".desc, $"neighbor_id".asc)
     annIvfCandidates(spark, dir, kCap)
       .join(e.select($"vec_id".as("query_id"), $"embedding".as("qe"),
-        expr(normStr("embedding")).as("qn")), Seq("query_id"))
+        norm($"embedding").as("qn")), Seq("query_id"))
       .join(e.select($"vec_id".as("neighbor_id"), $"embedding".as("ce"),
-        expr(normStr("embedding")).as("cn")), Seq("neighbor_id"))
-      .withColumn("sim", expr(simStr("qe", "ce", "qn", "cn")))
+        norm($"embedding").as("cn")), Seq("neighbor_id"))
+      .withColumn("sim", sim($"qe", $"ce", $"qn", $"cn"))
       .withColumn("rank", row_number().over(w))
       .where($"rank" <= 3)
       .select($"query_id", $"neighbor_id", $"sim", $"rank")

@@ -13,14 +13,21 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
   * `local[SPARK_GRAFT_CPUS]` session (default: all cores), timing each pass
   * as `graft.Bench` does (build the DataFrame, then count it). Per pass it
   * prints the wall time, the executor task-CPU ([[Telemetry.Listener]]:
-  * steal- and clock-invariant on a burstable box), the generated classes
-  * Janino compiled ([[Telemetry.compiled]]: a warm pass that still compiles
-  * is thrashing the codegen cache) and the top stages by task-CPU, each
-  * labelled with its job description. Per query it writes two plans
-  * under `outDir`:
+  * steal- and clock-invariant on a burstable box), the jobs it started,
+  * the generated classes Janino compiled and the ms it spent on them
+  * ([[Telemetry.compiled]]: a warm pass that still compiles is thrashing
+  * the codegen cache) and the top stages by task-CPU, each labelled with
+  * its job description. Per query it writes two plans under `outDir`:
   *   - `<query>.formatted.txt`: the formatted plan before execution;
   *   - `<query>.final.txt`: the final adaptive plan of the last pass's
   *     count, after it ran.
+  * A query may be named more than once; its passes run at each place it
+  * is named. perfbench's query_block interleaves its queries: a cold pass
+  * over the whole list, then a warm one, in one order. Reproduce it with
+  * `passes` = 1 and the list named three times (cold, warm, and a second
+  * warm pass to see whether the block has settled): whether a class stays
+  * cached depends on what ran in between, which `passes` > 1 on one query
+  * does not show.
   * Crawl rounds are profiled by `perfbench/run.py --trace 1` and
   * `graft.Bench` instead.
   */
@@ -55,6 +62,7 @@ object Profile {
         var minCpu = Double.MaxValue
         for (pass <- 1 to passes) {
           val c0 = cpu.totalNs.get()
+          val j0 = cpu.jobDescription.size
           val ((counted, n, wall), compiled) = Telemetry.compiled {
             val t0 = System.nanoTime()
             val df = SparkEntry.queries(q)(spark, sfDir)
@@ -69,10 +77,12 @@ object Profile {
           }
           BusDrain.drain(spark.sparkContext)
           val cpuS = (cpu.totalNs.get() - c0) / 1e9
+          val jobs = cpu.jobDescription.size - j0
           minWall = math.min(minWall, wall)
           minCpu = math.min(minCpu, cpuS)
           println(f"[profile] $q pass$pass: wall $wall%.2f s cpu $cpuS%.2f s " +
-            s"compiled ${compiled.classes} classes ($n rows)")
+            s"jobs $jobs compiled ${compiled.classes} classes " +
+            s"(${compiled.ms} ms) ($n rows)")
           cpu.drainTopStages(TopStages).foreach { case (sid, ns, name) =>
             println(f"[profile]   stage $sid%4d cpu ${ns / 1e9}%7.2f s  $name")
           }

@@ -1,7 +1,7 @@
 package graft
 
-import graft.operators.VectorOps
-import org.apache.spark.sql.SparkSession
+import graft.operators.{VectorExpr, VectorOps}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -314,5 +314,56 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(got == expected,
       s"clusters drifted: extra=${got -- expected}, missing=${expected -- got}")
     assert(expected.exists(_._3 >= 3), "no multi-hop component among pairs")
+  }
+
+  test("dot / norm2 kernels match the aggregate(zip_with) folds bit for bit, " +
+      "codegen and interpreted") {
+    import org.apache.spark.sql.types._
+    val rng = new java.util.SplittableRandom(7)
+    def vec(n: Int): Seq[java.lang.Float] =
+      Seq.fill(n)(java.lang.Float.valueOf((rng.nextDouble() * 2 - 1).toFloat))
+    val cases = Seq(
+      "length 64" -> (vec(64), vec(64)),
+      "length 3" -> (vec(3), vec(3)),
+      "unequal lengths" -> (vec(3), vec(4)),
+      "null element" -> (vec(2) :+ null, vec(3)),
+      "empty" -> (Seq.empty, Seq.empty),
+      "null array" -> (null, vec(3)))
+    val arr = ArrayType(FloatType, containsNull = true)
+    val schema = StructType(Seq(StructField("name", StringType),
+      StructField("a", arr), StructField("b", arr)))
+    // an RDD-backed frame: a local relation would be evaluated by the
+    // optimizer, in neither mode under test
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      cases.map { case (n, (a, b)) => Row(n, a, b) }, 1), schema)
+    val folds = Seq(
+      expr("aggregate(zip_with(a, b, (x, y) -> cast(x as double) * cast(y as double)), " +
+        "cast(0 as double), (acc, v) -> acc + v)"),
+      expr("aggregate(a, cast(0 as double), (acc, v) -> acc + cast(v as double) * cast(v as double))"))
+    val kernels = Seq(VectorExpr.dot(col("a"), col("b")), VectorExpr.norm2(col("a")))
+    def bits(r: Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+    val modes = Seq("codegen" -> ("CODEGEN_ONLY", "true"),
+      "interpreted" -> ("NO_CODEGEN", "false"))
+    for ((mode, (factory, wholeStage)) <- modes) {
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        val rows = df.select((col("name") +: folds) ++ kernels: _*).collect()
+        assert(rows.length == cases.size)
+        for (r <- rows) {
+          val name = r.getString(0)
+          assert(bits(r, 3) == bits(r, 1), s"dot, $name, $mode")
+          assert(bits(r, 4) == bits(r, 2), s"norm2, $name, $mode")
+        }
+        val byName = rows.map(r => r.getString(0) -> r).toMap
+        assert(!byName("length 64").isNullAt(3) && !byName("length 3").isNullAt(4))
+        assert(byName("unequal lengths").isNullAt(3) && byName("null element").isNullAt(4))
+        assert(byName("empty").getDouble(3) == 0.0 && byName("null array").isNullAt(3))
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
   }
 }
