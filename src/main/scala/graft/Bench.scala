@@ -42,10 +42,16 @@ object Bench {
 
   private val log = Log("bench")
 
+  /** The crawl levels' cores, and the corpus scale unless
+    * SPARK_GRAFT_BENCH_SCALE sets it (400 hosts per unit).
+    */
+  private[graft] val Levels = Seq(4, 16, 32)
+  private[graft] val DefaultScale = 3
+
   // SPARK_GRAFT_QUOTA_BOOST widens the scheduling round (quota scales with
   // round wall-clock length); default 20 ≈ the round-1 workload so numbers
   // stay comparable across rounds
-  private def benchSpec(scale: Int) = CorpusSpec(
+  private[graft] def benchSpec(scale: Int) = CorpusSpec(
     numHosts = 400 * scale, pagesPerHost = 100,
     imgBase = 256, imgVar = 65,
     quotaBoost = sys.env.getOrElse("SPARK_GRAFT_QUOTA_BOOST", "20").toInt)
@@ -266,7 +272,7 @@ object Bench {
       if (idleCap > 0) awaitCalmBox(math.min(idleCap, 300)) else 0.0
 
     // ---- crawl throughput: warmup, then measure N vs 4N vs peak ----
-    val scale = sys.env.getOrElse("SPARK_GRAFT_BENCH_SCALE", "3").toInt
+    val scale = sys.env.get("SPARK_GRAFT_BENCH_SCALE").fold(DefaultScale)(_.toInt)
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     val spec = benchSpec(scale)
 
@@ -278,7 +284,7 @@ object Bench {
     // is followed by an adjacent same-thread-count raw ceiling probe that
     // runs as long as the crawl did (capped 90 s): engine-vs-same-instant-
     // hardware with the probe sampling the same sustained-clock regime.
-    val levels = Seq(4, 16, 32)
+    val levels = Levels
     case class Run(pass: Int, n: Long, wall: Double, cpu: Double, raw: Double,
         threads: Int, steal: Double) {
       def thr: Double = n / wall

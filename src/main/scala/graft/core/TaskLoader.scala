@@ -19,11 +19,15 @@ import org.apache.spark.sql.SparkSession
   * Two limits hold in Spark 4.1:
   *   - Pool threads. `SQLExecution.withThreadLocalCaptured` does not carry
   *     the context loader, and adaptive query stages (shuffle exchanges,
-  *     result stages) submit through it. Their driver-side compile runs on
-  *     a pool thread whose loader is the one it inherited from the thread
-  *     that created it, so a block run here covers those compiles only
-  *     when the pool thread was created under it. Gains from this loader
-  *     alone are therefore uneven from run to run.
+  *     result stages) and broadcasts submit through it, so their
+  *     driver-side compile runs under the pool thread's loader. Those
+  *     pools are `ThreadUtils.newDaemonCachedThreadPool`s with corePoolSize
+  *     = max, so almost every submission starts a new thread, and a new
+  *     thread inherits the submitting thread's loader: a block run here
+  *     covers nearly all of them (in an interleaved run of perfbench's
+  *     query_block queries, 107 shuffle-exchange compiles ran on 92
+  *     distinct threads). Only a pool thread created outside a block, and
+  *     reused within 60 s, compiles under another loader.
   *   - No pinning. A thread's loader is set only inside [[run]], which
   *     restores it on exit. A caller thread left on a session's task
   *     loader fails once that session stops (`executor not accepting a

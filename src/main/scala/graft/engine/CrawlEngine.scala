@@ -55,6 +55,11 @@ import org.apache.spark.storage.StorageLevel
   *    ordering bottleneck;
   *  - fetch tasks are salted-range-repartitioned on (host, salt) so one
   *    mega-host cannot serialize a partition (AQE skew join also on);
+  *  - fan-out follows the round's rows ([[Fanout]]): the fetch and the
+  *    round's readers open about one task per 1024 rows, up to two per
+  *    core for the fetch and one per core for a reader, with the rows taken
+  *    from manifest counts and parquet footers. A round of a few hundred
+  *    URLs runs in a handful of tasks; a wide round keeps every core;
   *  - generated code is ROUND-INVARIANT: the round number reaches the
   *    generated Java as a reference ([[ProbeExpr.param]]), never as an
   *    inlined literal, except in the two frontier `notBeforeRound` scan
@@ -198,10 +203,12 @@ object CrawlEngine {
 
   private val frontierCols: Seq[String] = frontierSchema.fieldNames.toSeq
 
-  /** The membership key run of the frontier parquet `dir` (aux = addedSeq). */
-  private def writeFrontierKeys(spark: SparkSession, dir: String,
+  /** The membership key run of the frontier parquet `dir` of `rows` rows
+    * (aux = addedSeq).
+    */
+  private def writeFrontierKeys(spark: SparkSession, dir: String, rows: Long,
       keyDir: String, numBuckets: Int): Unit =
-    KeyLog.write(spark.read.schema(frontierSchema).parquet(dir)
+    KeyLog.write(Fanout.narrow(spark.read.schema(frontierSchema).parquet(dir), rows)
       .select(col("hostBucket"), col("urlHash"), col("addedSeq").as("aux")),
       keyDir, numBuckets): Unit
 
@@ -222,10 +229,13 @@ object CrawlEngine {
     * tombstone filter is an executor-local exact pair probe — resolving the
     * delta log costs NO shuffle, NO join, just the scan. The add dirs are
     * unpartitioned, so ONE scan lists them all: its plan (and generated
-    * code) does not change as the add log grows between compactions.
+    * code) does not change as the add log grows between compactions. The
+    * add log holds the manifest's live and dead rows, which size the scan
+    * ([[Fanout]]).
     */
   private[engine] def readFrontier(spark: SparkSession, m: Snapshot.Manifest): DataFrame = {
-    val adds = spark.read.schema(frontierSchema).parquet(m.frontierAddDirs: _*)
+    val adds = Fanout.narrow(spark.read.schema(frontierSchema).parquet(m.frontierAddDirs: _*),
+      m.frontierCount + m.frontierDeadCount)
     if (m.frontierRemDirs.isEmpty) adds
     else adds.where(!ProbeExpr.removedPair(ProbeExpr.RemovedCfg(m.frontierRemDirs))(
       col("hostBucket"), col("urlHash"), col("addedSeq")))
@@ -327,11 +337,12 @@ object CrawlEngine {
 
     val fDir = s"$outDir/frontier/a-init"
     val fkDir = s"$outDir/frontier_keys/a-init"
-    Telemetry.phase(spark.sparkContext, "init seedFrontier") {
+    val fCount = Telemetry.phase(spark.sparkContext, "init seedFrontier") {
       frontier0.write.mode("overwrite").parquet(fDir)
-      writeFrontierKeys(spark, fDir, fkDir, cfg.numBuckets)
+      val n = Fs.parquetRowCount(fDir)
+      writeFrontierKeys(spark, fDir, n, fkDir, cfg.numBuckets)
+      n
     }
-    val fCount = Fs.parquetRowCount(fDir)
     val bloomDir = s"$outDir/bloom/r0"
     Fs.mkdirs(bloomDir)
     val m0 = Snapshot.Manifest(0, -1, -1, 0L,
@@ -489,7 +500,7 @@ object CrawlEngine {
       .orderBy($"priority".desc, $"urlHash".asc)
     val survivor = !$"pb" && $"rk" <= $"quotaPerRound"
     // (an adaptive plan runs its exchanges when it is checkpointed)
-    val decided = ph("schedule")(joined
+    val checkpoint = ph("schedule")(joined
       .withColumn("pb", coalesce($"blocked", lit(true)))
       .withColumn("ps", pmod($"urlHash", lit(quotaSalt.toLong)))
       .withColumn("rk", row_number().over(quota))
@@ -500,6 +511,8 @@ object CrawlEngine {
       // checkpointed, not cached: its readers scan rows, so none of
       // them compiles a columnar accessor or a batch-pruning predicate
       .localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK))
+    // its readers narrowed like the frontier scan it ranks
+    val decided = Fanout.narrow(checkpoint, m.frontierCount + m.frontierDeadCount)
     val kept = !$"pb" && $"rk" <= $"quotaPerRound"
     val quotaKept = decided.where(kept)
 
@@ -535,12 +548,15 @@ object CrawlEngine {
     // EXPLICIT partition count: the task rows are tiny (no payload yet), so
     // AQE would coalesce this exchange to ~1 partition and serialize the
     // expensive per-URL fetch — cost lives in the work, not the bytes.
-    // An explicit repartition(N, cols) opts out of AQE coalescing.
-    // 2x over-partitioning: per-URL fetch cost varies (png vs jpeg, size),
-    // so 1-task-per-core makes the slowest task bound the stage; finer
-    // granularity lets the scheduler level the load (same reason real
-    // clusters run 2-4x tasks per slot)
-    val fetchParallelism = spark.sessionState.conf.numShufflePartitions * 2
+    // An explicit repartition(N, cols) opts out of AQE coalescing. N is
+    // sized by the round's rows ([[Fanout.fetch]]): the live frontier and
+    // the remaining budget bound the schedule with no counting job. A wide
+    // round gets 2x over-partitioning (per-URL fetch cost varies, png vs
+    // jpeg and size, so 1 task per core lets the slowest task bound the
+    // stage; finer tasks let the scheduler level the load); a round of a
+    // few hundred URLs runs in one task instead of paying a task's fixed
+    // cost (start-up, parquet writer) 2x cores times.
+    val fetchParallelism = Fanout.fetch(spark, math.min(m.frontierCount, remaining))
     val attemptsDir = s"$outDir/attempts/r$r"
     // uncompressed: the payload column dominates the bytes and is already
     // PNG/JPEG-entropy-coded — snappy costs compress CPU in every fetch
@@ -583,7 +599,7 @@ object CrawlEngine {
     // footer row counts ARE the scheduled / fetched-ok counts (no job)
     val fetchedOkCount = Fs.parquetRowCount(s"$attemptsDir/ok=true")
     val schedCount = fetchedOkCount + Fs.parquetRowCount(s"$attemptsDir/ok=false")
-    val results = readAttempts(spark, Seq(attemptsDir))
+    val results = Fanout.narrow(readAttempts(spark, Seq(attemptsDir)), schedCount)
     val okRes = results.where($"ok")
     val failRes = results.where(!$"ok")
 
@@ -818,7 +834,8 @@ object CrawlEngine {
         // key inside the same pass.
         // (compactEvery ≥ 2, so a compacting round has a committed dir.)
         val n = writeSeen(
-          readSeen(spark, m.seenDirs).withColumn("aux", lit(null).cast("int"))
+          Fanout.narrow(readSeen(spark, m.seenDirs), m.seenCount)
+            .withColumn("aux", lit(null).cast("int"))
             .unionByName(roundRows),
           compactDir, cfg.numBuckets,
           sidecars(compactKeyDir, rebuiltBloom, None, oldestLiveStamp))
@@ -856,7 +873,7 @@ object CrawlEngine {
       // membership sidecar from the just-written delta (pruned re-read —
       // cheaper than recomputing the fresh/retry pipeline)
       if (n > 0 && !addLogWillCompact)
-        writeFrontierKeys(spark, addDir, addKeyDir, cfg.numBuckets)
+        writeFrontierKeys(spark, addDir, n, addKeyDir, cfg.numBuckets)
       n
     })
     // frontier sidecar maintenance, tiered on BOTH sidecars: (1) the
@@ -948,7 +965,7 @@ object CrawlEngine {
       Await.result(foldF, Duration.Inf)
 
     // a local checkpoint keeps its blocks until they are released
-    decided.queryExecution.logical match {
+    checkpoint.queryExecution.logical match {
       case l: LogicalRDD => org.apache.spark.graft.CheckpointBlocks.release(l.rdd)
       case _ =>
     }
@@ -963,6 +980,7 @@ object CrawlEngine {
     val grownAddDirs =
       if (addCount > 0) m.frontierAddDirs :+ addDir else m.frontierAddDirs
     val liveCount = m.frontierCount + addCount - remCount
+    val deadCount = m.frontierDeadCount + remCount
     val (newAddDirs, newKeyDirs, newRemDirs, newFrontierCount, newDeadCount) =
       if (compactFrontier) ph("compactFrontier") {
         val compactDir = s"$outDir/frontier/compact-r$r"
@@ -970,20 +988,21 @@ object CrawlEngine {
         // the accumulated fold run plus this round's raw tombstone run —
         // exactly what readFrontier needs to resolve the full add log
         val mGrown = m.copy(frontierAddDirs = grownAddDirs,
-          frontierKeyDirs = foldKeyDirs, frontierRemDirs = foldRemDirs)
+          frontierKeyDirs = foldKeyDirs, frontierRemDirs = foldRemDirs,
+          frontierCount = liveCount, frontierDeadCount = deadCount)
         // addedSeq values are PRESERVED: future tombstones reference them
         readFrontier(spark, mGrown)
           .write.mode("overwrite").parquet(compactDir)
+        val compactCount = Fs.parquetRowCount(compactDir)
         val compactKeyDir = s"$outDir/frontier_keys/compact-r$r"
-        writeFrontierKeys(spark, compactDir, compactKeyDir, cfg.numBuckets)
+        writeFrontierKeys(spark, compactDir, compactCount, compactKeyDir, cfg.numBuckets)
         // this round's raw tombstone run was only needed by the compaction
         // read above and no manifest ever references it — drop it
         // unconditionally: with remCount == 0 the seen pass still made it
         Fs.delete(remDir)
         (Vector(compactDir), Vector(compactKeyDir), Vector.empty[String],
-          Fs.parquetRowCount(compactDir), 0L)
-      } else (grownAddDirs, foldKeyDirs, foldRemDirs, liveCount,
-        m.frontierDeadCount + remCount)
+          compactCount, 0L)
+      } else (grownAddDirs, foldKeyDirs, foldRemDirs, liveCount, deadCount)
 
     val totalScheduled = m.totalScheduled + schedCount
     Snapshot.Manifest(

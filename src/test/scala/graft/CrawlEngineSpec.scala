@@ -659,4 +659,30 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(res.totalScheduled == cfg.maxResults &&
       res.attempts(spark).where("failKind = 'ratelimited'").count() > 0L)
   }
+
+  test("a steady resume round of the deep corpus runs in few tasks, ≡ oracle") {
+    // ~90 URLs per round: the fan-out is sized by the round's rows, so the
+    // fetch and the round's readers run in about one task each, not in one
+    // per core (the fetch in two per core)
+    val (dir, sc) = (tmpDir(), spark.sparkContext)
+    val cfg = DeepCrawl.cfg
+    CrawlEngine.run(spark, DeepCrawl.spec, DeepCrawl.seeds, cfg, dir)
+    org.apache.spark.graft.BusDrain.drain(sc) // no earlier job
+    val jobs = new Telemetry.Listener
+    sc.addSparkListener(jobs)
+    val res =
+      try (1 to 3).map(r => CrawlEngine.resume(spark, DeepCrawl.spec,
+        cfg.copy(maxRounds = r + 1), dir)).last
+      finally { org.apache.spark.graft.BusDrain.drain(sc); sc.removeSparkListener(jobs) }
+    val perRound = (1 to 3).map { r =>
+      val ps = jobs.phases.collect { case (d, p) if d.startsWith(s"round $r ") => p }
+      (r, ps.map(_.jobs).sum, ps.map(_.tasks).sum)
+    }
+    assert(perRound.forall { case (_, j, t) => j <= 14 && t <= 35 },
+      "(round, jobs, tasks): " + perRound.mkString(", "))
+    val oracle = RefOracle.crawl(DeepCrawl.spec, DeepCrawl.seeds, cfg.copy(maxRounds = 4))
+    assert(res.rounds == 4 && !res.manifest.done)
+    assert(engineOrder(res) == oracle.order, "crawl order mismatch")
+    assert(engineSeen(res) == oracle.seen, "seen set mismatch")
+  }
 }

@@ -6,8 +6,9 @@ import graft.core.Telemetry
 import org.apache.spark.graft.BusDrain
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 
-/** Query profiler:
-  * `Test/runMain graft.Profile <sfDir> <outDir> <passes> <query>...`
+/** Query and crawl profiler:
+  * `Test/runMain graft.Profile <sfDir> <outDir> <passes> <query>...` or
+  * `Test/runMain graft.Profile --crawl <rounds>`.
   *
   * Runs each named `SparkEntry` query `passes` times on one
   * `local[SPARK_GRAFT_CPUS]` session (default: all cores), timing each pass
@@ -28,13 +29,61 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
   * warm pass to see whether the block has settled): whether a class stays
   * cached depends on what ran in between, which `passes` > 1 on one query
   * does not show.
-  * Crawl rounds are profiled by `perfbench/run.py --trace 1` and
-  * `graft.Bench` instead.
+  *
+  * `--crawl` runs round 0 of the [[DeepCrawl]] corpus, then `rounds`
+  * resume rounds, each one `CrawlEngine.resume` call as perfbench's
+  * crawl_deep makes it. Per resume round it prints the wall time, jobs,
+  * tasks, task-CPU and compiled classes of the round, then the same per
+  * phase ([[Telemetry.Listener.phases]]; the tail phases overlap, so their
+  * compile counts may overlap too).
   */
 object Profile {
   private val TopStages = 10
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    if (args.headOption.contains("--crawl")) {
+      require(args.length == 2, "usage: graft.Profile --crawl <rounds>")
+      crawl(args(1).toInt)
+    } else queries(args)
+
+  private def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  private def crawl(rounds: Int): Unit = {
+    import graft.engine.{CrawlEngine, Fs}
+    val spark = Session.builder(cores).appName("graft-profile-crawl").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val cpu = new Telemetry.Listener
+    spark.sparkContext.addSparkListener(cpu)
+    val dir = Files.createTempDirectory("graft-profile-crawl").toFile
+    val root = dir.toString
+    try {
+      var scheduled = CrawlEngine.run(spark, DeepCrawl.spec, DeepCrawl.seeds,
+        DeepCrawl.cfg, root).totalScheduled
+      for (r <- 1 to rounds) {
+        val t0 = System.nanoTime()
+        val (res, compiled) = Telemetry.compiled(CrawlEngine.resume(spark,
+          DeepCrawl.spec, DeepCrawl.cfg.copy(maxRounds = r + 1), root))
+        val wall = (System.nanoTime() - t0) / 1e9
+        BusDrain.drain(spark.sparkContext)
+        val phases = cpu.phases.toSeq.filter(_._1.startsWith(s"round $r "))
+          .sortBy(-_._2.cpuNs)
+        val ps = phases.map(_._2)
+        println(f"[profile] round $r: wall $wall%.2f s, " +
+          s"${res.totalScheduled - scheduled} URLs, jobs ${ps.map(_.jobs).sum} " +
+          s"tasks ${ps.map(_.tasks).sum} " + f"cpu ${ps.map(_.cpuNs).sum / 1e9}%.3f s " +
+          s"compiled ${compiled.classes} classes (${compiled.ms} ms)")
+        phases.foreach { case (label, p) =>
+          println(f"[profile]   ${label.stripPrefix(s"round $r ")}%-18s jobs ${p.jobs}%3d " +
+            f"tasks ${p.tasks}%4d cpu ${p.cpuNs / 1e9}%6.3f s compiled ${p.classes}%3d classes")
+        }
+        scheduled = res.totalScheduled
+        if (res.manifest.done) println(s"[profile] the crawl is done after round $r")
+      }
+    } finally { spark.stop(); Fs.deleteLocalDir(dir) }
+  }
+
+  private def queries(args: Array[String]): Unit = {
     require(args.length >= 4,
       "usage: graft.Profile <sfDir> <outDir> <passes> <query>...")
     val Array(sfDir, outDir, passesArg) = args.take(3)
@@ -42,8 +91,6 @@ object Profile {
     val queries = args.drop(3).toSeq
     val unknown = queries.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
 
     val spark = Session.builder(cores).appName("graft-profile").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

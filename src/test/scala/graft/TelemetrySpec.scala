@@ -50,4 +50,23 @@ class TelemetrySpec extends AnyFunSuite {
     assert(l.stageLabel(8) == "[job 3 cc: pairs] count at GraphOps.scala:104")
     assert(l.jobDescription.get(3) == "cc: pairs")
   }
+
+  test("the listener keeps jobs, tasks, task-CPU and compiles per phase label") {
+    val spark = Session.builder(4).appName("telemetry-spec").getOrCreate()
+    val sc = spark.sparkContext
+    org.apache.spark.graft.BusDrain.drain(sc)
+    val l = new Telemetry.Listener
+    sc.addSparkListener(l)
+    try {
+      Telemetry.phase(sc, "spec: rdd")(sc.parallelize(1 to 6, 3).foreach(_ => ()))
+      // a literal no earlier plan has: its generated class is compiled here
+      Telemetry.phase(sc, "spec: query")(
+        spark.range(0, 8, 1, 2).selectExpr(s"id * ${System.nanoTime()} AS x").collect())
+    } finally { org.apache.spark.graft.BusDrain.drain(sc); sc.removeSparkListener(l) }
+    val rdd = l.phases("spec: rdd")
+    assert(rdd.jobs == 1 && rdd.tasks == 3 && rdd.cpuNs > 0 && rdd.classes == 0, rdd)
+    val query = l.phases("spec: query")
+    assert(query.jobs >= 1 && query.tasks >= 2 && query.classes >= 1, query)
+    assert(l.phases.values.map(_.cpuNs).sum == l.totalNs.get())
+  }
 }
