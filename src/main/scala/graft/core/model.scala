@@ -129,25 +129,24 @@ case class HostPolicy(
   * @param maxRounds    hard stop on scheduling rounds
   * @param maxRetries   drop a URL after this many failed attempts (ref 5)
   * @param gamma        OPIC depth damping factor for child priority
-  * @param numBuckets   host-hash shard count for seen/frontier state and the
-  *                     per-bucket Bloom files. Size so ONE bucket's filter
-  *                     stays executor-loadable: at the 10^10-URL design
-  *                     point and 3% fpp the total filter state is ~9 GB, so
-  *                     production runs want 4096+ buckets (~2 MB each); the
-  *                     default suits 10^8-scale runs, tests pin 8-16
-  * @param bloomExpectedItems per-round expected items for the per-bucket
-  *                     Bloom prefilter (0 = auto-size from the round);
-  *                     deliberately undersizing it raises the false-positive
-  *                     rate — correctness must NOT depend on it (the exact
-  *                     anti-join is authoritative; tested adversarially)
-  * @param bloomFpp     target false-positive probability for the Bloom
+  * @param numBuckets   host-hash shard count for the seen and frontier state
+  *                     and its key runs. Size so ONE bucket's runs stay
+  *                     executor-loadable: a seen key is 12 B of run plus
+  *                     ~0.9 B of the run's 3%-fpp filter, so at the 10^10-URL
+  *                     design point the seen runs are ~130 GB (~9 GB of it
+  *                     filter) and production runs want 4096+ buckets
+  *                     (~31 MB each); the default 64 suits 10^8-scale runs
+  *                     (~20 MB each), tests pin 4-16. Each run's filter is
+  *                     sized to the run, so its false-positive rate holds at
+  *                     any bucket count
   * @param ttlRounds    TTL refetch horizon: a seen entry older than this
   *                     many rounds stops excluding its URL, so the URL can
   *                     be re-discovered and refetched (ref: TTL cache expiry
   *                     + refetch, medcrawler/base.py:52-93,161-216).
-  *                     0 = seen-forever (fetch-once). The Bloom prefilter is
-  *                     unaffected: expired entries become false positives
-  *                     that the exact (liveness-filtered) anti-join clears.
+  *                     0 = seen-forever (fetch-once). An expired stamp
+  *                     stays in its key run, filter included, until the
+  *                     bucket's run is next rewritten; until then the exact
+  *                     (liveness-filtered) probe clears it.
   * @param paceWallClock when true, the fetch stage enforces each host's
   *                     minIntervalMs IN REAL TIME: consecutive fetch STARTS
   *                     against one host are spaced ≥ minIntervalMs apart
@@ -189,8 +188,6 @@ case class CrawlConfig(
     maxRetries: Int = 5,
     gamma: Double = 0.85,
     numBuckets: Int = 64,
-    bloomExpectedItems: Long = 0L,
-    bloomFpp: Double = 0.03,
     ttlRounds: Int = 0,
     paceWallClock: Boolean = false,
     compactEvery: Int = 16,
@@ -204,10 +201,6 @@ case class CrawlConfig(
   require(maxRetries >= 1, s"maxRetries must be >= 1, got $maxRetries")
   require(gamma > 0 && gamma <= 1, s"gamma must be in (0, 1], got $gamma")
   require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-  require(bloomExpectedItems >= 0,
-    s"bloomExpectedItems must be >= 0 (0 = auto), got $bloomExpectedItems")
-  require(bloomFpp > 0 && bloomFpp < 1,
-    s"bloomFpp must be in (0, 1), got $bloomFpp")
   require(ttlRounds >= 0,
     s"ttlRounds must be >= 0 (0 = seen-forever), got $ttlRounds")
   require(compactEvery >= 2,

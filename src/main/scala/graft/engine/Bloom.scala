@@ -11,54 +11,21 @@ import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{BinaryType, DataType}
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Per-shard Bloom prefilter over the URL-seen set.
-  *
-  * North-rule requirement: "URL-seen is a partitioned Bloom/cuckoo filter
-  * keyed by xxHash64 of canonicalized URLs sharded by host-hash". The Bloom
-  * is a PREFILTER only — the authoritative membership check is the exact
-  * per-bucket [[KeyLog]] run probe (a Bloom false positive must not drop a
-  * URL, and an absent filter must not veto the exact probe; see SURVEY.md
-  * §7.4). Reference analog: the in-memory `old_item_ids: Set[str]` exclusion
-  * (medcrawler/base.py:348) — exact there, exact here; the Bloom keeps the
-  * probe O(1) for the common not-seen case.
+/** A native, map-side-combined Bloom-filter build ([[BloomBuildAgg]]) over
+  * Spark's sketch `BloomFilter`. The text operators' Bloom prescreen builds
+  * its filter with it (`TextOps.decontaminateBloom`). The crawl's URL-seen
+  * filters are not built here: each [[KeyLog]] run carries the filter over
+  * its own keys.
   */
 object Bloom {
 
-  /** One pass, map-side-combined per-bucket Bloom build:
-    * `df.groupBy(hostBucket).agg(bloom_agg(urlHash))`.
+  /** One pass, map-side-combined Bloom build:
+    * `df.agg(bloom_agg(key))`, or per group after a `groupBy`.
     */
   def bloomAgg(col: Column, expectedItems: Long, fpp: Double): Column =
     bridge.toColumn(
       BloomBuildAgg(bridge.toExpression(col), expectedItems, fpp)
         .toAggregateExpression())
-
-  def deserialize(bytes: Array[Byte]): BloomFilter =
-    BloomFilter.readFrom(new ByteArrayInputStream(bytes))
-
-  def serialize(bf: BloomFilter): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    bf.writeTo(bos)
-    bos.toByteArray
-  }
-
-  def bucketPath(dir: String, bucket: Int): String = s"$dir/b$bucket.bloom"
-}
-
-/** Executor-local bucket-file cache for bloom probes: deserialize each
-  * probed bucket once per executor, keyed by the immutable (dir, bucket)
-  * identity of the committed bloom state. Bounded [[LruCache]]: overflow
-  * evicts only the least-recently-probed entries instead of stampeding
-  * every thread into a full re-read.
-  */
-object BloomCache {
-  @transient private lazy val cache =
-    new LruCache[(String, Int), Option[BloomFilter]](4096)
-
-  def get(dir: String, bucket: Int): Option[BloomFilter] =
-    cache.get((dir, bucket)) { case (d, b) =>
-      val p = Bloom.bucketPath(d, b)
-      if (Fs.exists(p)) Some(Bloom.deserialize(Fs.readAllBytes(p))) else None
-    }
 }
 
 /** Native Catalyst aggregate building a Bloom filter of long keys per group.
@@ -90,10 +57,14 @@ case class BloomBuildAgg(
 
   override def eval(buffer: BloomFilter): Any = serialize(buffer)
 
-  override def serialize(buffer: BloomFilter): Array[Byte] = Bloom.serialize(buffer)
+  override def serialize(buffer: BloomFilter): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    buffer.writeTo(bos)
+    bos.toByteArray
+  }
 
   override def deserialize(storageFormat: Array[Byte]): BloomFilter =
-    Bloom.deserialize(storageFormat)
+    BloomFilter.readFrom(new ByteArrayInputStream(storageFormat))
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false

@@ -24,7 +24,7 @@ import org.apache.spark.storage.StorageLevel
   *     host──▶ per-host quota ──(rare) global budget──▶ schedule
   *     ──salted repartition──▶ mapPartitions synthetic fetch
   *     ──explode outlinks──▶ OPIC cash aggregation
-  *     ──executor-local seen probe (bloom + exact KeyLog runs)──▶
+  *     ──executor-local seen probe (filtered exact KeyLog runs)──▶
   *     next frontier
   *
   * Determinism contract (SURVEY.md §7.3, mirrored by [[graft.core.RefOracle]]):
@@ -38,11 +38,11 @@ import org.apache.spark.storage.StorageLevel
   *  - scheduling rounds never touch image `bytes` (they live only in the
   *    fetched table; Parquet column pruning keeps scans narrow);
   *  - the seen table is NEVER scanned or shuffled by a round: membership is
-  *    an executor-local probe (per-bucket Bloom prefilter + exact sorted
-  *    [[KeyLog]] runs, LSM-compacted); the queryable parquet deltas exist
-  *    for consumers and compaction only. There is no round-start seen check
-  *    at all — frontier ∩ live-seen = ∅ is an engine invariant shared with
-  *    the oracle;
+  *    an executor-local probe (exact sorted [[KeyLog]] runs, each behind a
+  *    Bloom filter over its own keys, LSM-compacted); the queryable parquet
+  *    deltas exist for consumers and compaction only. There is no
+  *    round-start seen check at all — frontier ∩ live-seen = ∅ is an engine
+  *    invariant shared with the oracle;
   *  - the frontier is an append-only DELTA LOG (add deltas + exact
   *    (urlHash, addedSeq) tombstone runs): a round writes O(scheduled +
   *    discovered) bytes, never O(frontier); unchanged entries are never
@@ -310,10 +310,6 @@ object CrawlEngine {
     require(Snapshot.latest(outDir).isEmpty,
       s"$outDir already contains a committed crawl snapshot; " +
         "resume it or use a fresh directory")
-    // the manifest's hand-rolled JSON field scanner cannot round-trip paths
-    // containing quote/comma/bracket characters — reject them up front
-    require(!outDir.exists(c => c == '"' || c == ',' || c == ']' || c == '\\'),
-      s"outDir must not contain \" , ] or \\ characters: $outDir")
 
     // seed frontier with dedup (max priority, tie → min seedId per URL):
     // a min(struct) aggregate, not a window — partial aggregation combines
@@ -343,19 +339,17 @@ object CrawlEngine {
       writeFrontierKeys(spark, fDir, n, fkDir, cfg.numBuckets)
       n
     }
-    val bloomDir = s"$outDir/bloom/r0"
-    Fs.mkdirs(bloomDir)
     val m0 = Snapshot.Manifest(0, -1, -1, 0L,
       Vector(fDir), Vector(fkDir), Vector.empty,
       Vector.empty, Vector.empty, Vector.empty,
-      Vector.empty, Vector.empty, bloomDir, fCount, 0L, 0L,
+      Vector.empty, Vector.empty, fCount, 0L, 0L,
       done = fCount == 0, buckets = cfg.numBuckets)
     Snapshot.commit(outDir, m0)
     loop(spark, spec, cfg, outDir, m0)
   }
 
   /** Time-travel: open the crawl as of an older committed snapshot id —
-    * every state pointer (frontier, seen, fetched, schedule, metrics, bloom)
+    * every state pointer (frontier, seen, fetched, schedule, metrics)
     * is the one that was current at that commit (Iceberg snapshot-read
     * analog; ref analog: the TTL cache serving an older consistent view,
     * medcrawler/base.py:52-93).
@@ -375,16 +369,16 @@ object CrawlEngine {
       sys.error(s"no committed snapshot under $outDir"))
     // validate the layout BEFORE any round runs — an old layout failing
     // the mid-round invariant check would already have fetched a full
-    // round's URLs before aborting
+    // round's URLs before aborting (a fmt-2 layout's key runs have no
+    // filter, and its seen filter lives in `bloom/` dirs)
     require(m.fmt >= Snapshot.Fmt,
       s"$outDir has manifest fmt=${m.fmt}, an unsupported layout (this " +
         s"build needs fmt=${Snapshot.Fmt})")
     // bucket-count parity: every sidecar probe computes hostBucket =
     // pmod(hash, cfg.numBuckets), so resuming with a different value than
     // the one the runs were written with silently misses every membership
-    // probe (refetch storm + frontier duplicates). 0 = pre-buckets manifest
-    // (unknown); the next commit stamps the current value.
-    require(m.buckets == 0 || m.buckets == cfg.numBuckets,
+    // probe (refetch storm + frontier duplicates)
+    require(m.buckets == cfg.numBuckets,
       s"$outDir was committed with numBuckets=${m.buckets} but " +
         s"cfg.numBuckets=${cfg.numBuckets} — membership probes would " +
         "re-bucket and miss every stored key")
@@ -464,11 +458,13 @@ object CrawlEngine {
     // seen; a TTL-dead stamp can never come back to life (r only grows).
     // The seen set is therefore NEVER scanned or shuffled in a round
     // (the round-2 scale-killer): seen exclusion runs ONCE, at expansion,
-    // as an executor-local Bloom + exact KeyLog probe (P5 analog:
+    // as an executor-local probe of filtered exact KeyLog runs (P5 analog:
     // `if pmid not in old_item_ids`, medcrawler/pubmed.py:185-187).
 
     // ---- robots + politeness dimension (J2: broadcast hash join) ----
-    val policyDf = policyFrame(spark, spec.hostPolicies)
+    // (its broadcast collects the rows in tasks sized like any reader's)
+    val policyDf = Fanout.narrow(policyFrame(spark, spec.hostPolicies),
+      spec.hostPolicies.size)
     val joined = eligible
       .join(broadcast(policyDf), Seq("host"), "left")
       .withColumn("minIntervalMs", coalesce($"minIntervalMs", lit(340)))
@@ -685,8 +681,8 @@ object CrawlEngine {
     // new URLs: not seen and not already in the frontier. BOTH exclusions
     // are executor-local probes over committed state — the round-2 design
     // had an anti-join here whose excluded side was O(frontier + seen):
-    //  - seen: Bloom prefilter + exact KeyLog runs, liveness pinned at the
-    //    CURRENT round r (the oracle's isSeen(h, round));
+    //  - seen: each KeyLog run's filter, then its exact binary search,
+    //    liveness pinned at the CURRENT round r (the oracle's isSeen(h, round));
     //  - frontier membership (the oracle's `frontier.contains`): some add
     //    run holds a version of this urlHash that no tombstone has killed,
     //    AS OF ROUND START — which is exactly right: every URL this round
@@ -708,7 +704,7 @@ object CrawlEngine {
         s"frontier=${m.frontierKeyDirs.size} " +
         s"rem=${m.frontierRemDirs.size}): unsupported layout")
     val notSeen =
-      !ProbeExpr.seenLive(ProbeExpr.SeenCfg(m.bloomDir, m.seenKeyDirs, r,
+      !ProbeExpr.seenLive(ProbeExpr.SeenCfg(m.seenKeyDirs, r,
         cfg.ttlRounds))($"hostBucket", $"urlHash")
     val notMember =
       !ProbeExpr.memberLive(ProbeExpr.MemberCfg(m.frontierKeyDirs,
@@ -787,18 +783,12 @@ object CrawlEngine {
     implicit val tailContext: scala.concurrent.ExecutionContext =
       TaskLoader.executionContext(spark)
 
-    val expectedItems =
-      if (cfg.bloomExpectedItems > 0) cfg.bloomExpectedItems else 1L << 16
-    val bloomDirNew = s"$outDir/bloom/r$r"
-
     // exact-probe sidecar of the seen delta: per-bucket sorted key runs,
     // TIERED-folded ([[tieredFold]]) — the delta lands in a small L1 run
     // (O(L1+delta) bytes/round), merged into the base run only at the
     // base/l1MergeDenom threshold, so a round never rewrites the key state.
-    // The hot seen probe is ≤ 2 binary searches (base + L1). The Bloom
-    // prefilter gets the delta's keys in the same pass (expectedItems must
-    // be CONSTANT across rounds: sketch filters only merge at identical bit
-    // size; saturation degrades the prefilter's fpp, never correctness).
+    // The hot seen probe is ≤ 2 runs (base + L1), each a filter check and a
+    // binary search; every run written carries the filter over its keys.
     val seenKeyDelta = s"$outDir/seen_keys/d$r"
     val seenKeyDir = s"$outDir/seen_keys/r$r"
     val seenKeyL1Dir = s"$outDir/seen_keys/l1-r$r"
@@ -806,58 +796,52 @@ object CrawlEngine {
     // would make the per-round union (and file listing) quadratic --
     // the Iceberg-compaction analog; the manifest swaps N delta dirs for one.
     // A compacting round folds its delta straight into the compaction, so
-    // it writes no delta dir, key run or Bloom merge that the compaction
-    // would read once or delete unread.
+    // it writes no delta dir or key run that the compaction would read once
+    // or delete unread.
     val tombstones = spark.sparkContext.longAccumulator(s"tombstones:$remDir")
     // seen stamps older than this are TTL-dead from the next round on
     val oldestLiveStamp = if (cfg.ttlRounds > 0) r - cfg.ttlRounds + 1 else Int.MinValue
-    def sidecars(keyDir: String, bloomDir: String, bloomPrev: Option[String],
-        minLiveAux: Int) = RoundSidecars(keyDir, bloomDir, bloomPrev,
-      expectedItems, cfg.bloomFpp, minLiveAux, remDir, tombstones)
+    def sidecars(keyDir: String, minLiveAux: Int) =
+      RoundSidecars(keyDir, minLiveAux, remDir, tombstones)
     val seenF = Future(
       if (m.seenDirs.size + 1 >= cfg.compactEvery) ph("compactSeen") {
         val compactDir = s"$outDir/seen/compact-r$r"
         val compactKeyDir = s"$outDir/seen_keys/compact-r$r"
-        // REBUILD the per-bucket Bloom prefilters from the live keys (judge
-        // r3 "What's missing #1"): the merged chain only ever accretes, so
-        // over a long TTL-churn crawl dead keys would saturate it toward
-        // fpp→1 and the prefilter would quietly stop prefiltering. The
-        // rebuilt filter's pass-rate on dead keys falls back to ~fpp.
-        val rebuiltBloom = s"$outDir/bloom/rebuild-r$r"
         // keep the NEWEST stamp per key: with a TTL a refetched URL may
         // appear in several deltas, and only the latest drives liveness.
         // The PARQUET log keeps every key ever stamped (the queryable
         // seen-set consumers and the oracle's seen set expect that); only
         // the probe-side sidecars drop stamps already TTL-dead (they can
-        // never revive: rounds only grow). The bucket repartition clusters
-        // each key, so [[RoundSidecars.merge]] keeps the newest stamp per
-        // key inside the same pass.
+        // never revive: rounds only grow), so the compacted runs' filters
+        // forget them too. The bucket repartition clusters each key, so
+        // [[RoundSidecars.merge]] keeps the newest stamp per key inside the
+        // same pass.
         // (compactEvery ≥ 2, so a compacting round has a committed dir.)
         val n = writeSeen(
           Fanout.narrow(readSeen(spark, m.seenDirs), m.seenCount)
             .withColumn("aux", lit(null).cast("int"))
             .unionByName(roundRows),
           compactDir, cfg.numBuckets,
-          sidecars(compactKeyDir, rebuiltBloom, None, oldestLiveStamp))
+          sidecars(compactKeyDir, oldestLiveStamp))
         // seenCount between compactions is a cumulative STAMP count (with a
         // TTL a refetched URL stamps several deltas); compaction collapses
         // duplicates, so it re-baselines from the compacted footers — exact
         // distinct-key count, no job
-        (Vector(compactDir), Vector(compactKeyDir), n, rebuiltBloom)
+        (Vector(compactDir), Vector(compactKeyDir), n)
       } else ph("writeSeen") {
         val n = writeSeen(roundRows, seenDir, cfg.numBuckets,
-          sidecars(seenKeyDelta, bloomDirNew, Some(m.bloomDir), Int.MinValue))
+          sidecars(seenKeyDelta, Int.MinValue))
         // an empty delta (fully rate-limited round) never enters the
-        // manifest; its Bloom dir is the committed one, linked forward
+        // manifest
         val seenState =
           if (n == 0) {
             Fs.delete(seenDir)
-            (m.seenDirs, m.seenKeyDirs, m.seenCount, bloomDirNew)
+            (m.seenDirs, m.seenKeyDirs, m.seenCount)
           } else (m.seenDirs :+ seenDir, ph("foldSeenKeys")(
             tieredFold(spark, m.seenKeyDirs, Seq(seenKeyDelta), Nil,
               seenKeyDir, seenKeyL1Dir, cfg, keepMaxAuxPerHash = true,
               minLiveAux = oldestLiveStamp)),
-            m.seenCount + n, bloomDirNew)
+            m.seenCount + n)
         Fs.delete(seenKeyDelta) // ephemeral: superseded by the fold
         seenState
       })
@@ -959,7 +943,7 @@ object CrawlEngine {
     // every tail job has finished (failed or not) before the round returns
     // or throws: no sibling keeps writing state behind a failed round
     awaitAll(Seq(seenF, addsF, foldF, metricsF))
-    val (newSeenDirs, newSeenKeyDirs, newSeenCount, newBloomDir) =
+    val (newSeenDirs, newSeenKeyDirs, newSeenCount) =
       Await.result(seenF, Duration.Inf)
     val (addCount, remCount, foldKeyDirs, foldRemDirs, compactFrontier) =
       Await.result(foldF, Duration.Inf)
@@ -1018,7 +1002,6 @@ object CrawlEngine {
       fetchedDirs = if (fetchedOkCount > 0) m.fetchedDirs :+ attemptsDir else m.fetchedDirs,
       scheduleDirs = if (schedCount > 0) m.scheduleDirs :+ attemptsDir else m.scheduleDirs,
       metricsDirs = m.metricsDirs :+ metricsDir,
-      bloomDir = newBloomDir,
       frontierCount = newFrontierCount,
       frontierDeadCount = newDeadCount,
       seenCount = newSeenCount,

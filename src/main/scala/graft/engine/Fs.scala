@@ -7,8 +7,8 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil, Options, Path, U
 
 /** Hadoop-FileSystem-backed engine-state I/O.
   *
-  * All engine sidecar state (snapshot manifests, Bloom bucket files, exact
-  * key-log runs) goes through the Hadoop `FileSystem` API so the same code
+  * All engine sidecar state (snapshot manifests, exact key-log runs and
+  * their filters) goes through the Hadoop `FileSystem` API so the same code
   * addresses local disk in this sandbox and HDFS/S3A on a real cluster —
   * the data-plane parquet reads/writes already do (Spark uses Hadoop FS
   * underneath).

@@ -19,8 +19,8 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
   *    everyone else keeps reading the untouched map while it happens.
   *
   * Correctness never depends on cache state: cached values are pure
-  * functions of immutable committed files (runs and bloom buckets are
-  * write-once; new state lands in new dirs), so an entry evicted mid-probe
+  * functions of immutable committed files (runs are write-once; new state
+  * lands in new dirs), so an entry evicted mid-probe
   * is simply reloaded on the next miss.
   */
 final class LruCache[K, V](capacity: Int) {

@@ -19,7 +19,7 @@ import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
   * `FileSystem.create` call funnels a non-null permission into
   * `LocalFSFileOutputStream`'s constructor. A crawl round lands hundreds of
   * files (attempts parquet parts + .crc shadows, per-bucket key runs,
-  * blooms, metrics); at 32 concurrent writer tasks the fork storm turns
+  * metrics); at 32 concurrent writer tasks the fork storm turns
   * into kernel-dominated CPU (observed: >60% system time, executor threads
   * sampled in `ProcessImpl.forkAndExec` and `Thread.start0`) that grows
   * with core count and buries the engine's real work.

@@ -24,31 +24,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * `(int, long)` arguments, so the generated stage reads columns and calls
   * the probe with zero allocation per row. `eval` covers interpreted mode.
   *
-  * The probe logic itself (Bloom prefilter + sorted-run binary search over
-  * executor-cached [[KeyLog]] runs) lives on the config case classes —
+  * The probe logic itself (each executor-cached [[KeyLog]] run's filter,
+  * then its sorted-run binary search) lives on the config case classes —
   * shared verbatim between eval and codegen.
   */
 object ProbeExpr {
 
-  /** `(hostBucket, urlHash) → live-seen` probe: Bloom prefilter (absent
-    * filter = maybe), then exact key-run probes with TTL liveness at round
-    * `round` (`ttl ≤ 0` = seen-forever). The seen state is never scanned.
+  /** `(hostBucket, urlHash) → live-seen` probe: each key run's filter,
+    * then its exact binary search, with TTL liveness at round `round`
+    * (`ttl ≤ 0` = seen-forever). The seen state is never scanned.
     */
-  case class SeenCfg(bloomDir: String, keyDirs: IndexedSeq[String],
-      round: Int, ttl: Int) {
-    def probe(b: Int, h: Long): Boolean = {
-      val maybe = BloomCache.get(bloomDir, b) match {
-        case Some(bf) => bf.mightContainLong(h)
-        case None => true // missing filter must not veto the exact probe
-      }
-      maybe && keyDirs.exists { d =>
-        KeyLogCache.get(d, b) match {
-          case Some((hs, aux)) =>
-            KeyLog.existsMatch(hs, aux, h)(sr => ttl <= 0 || round - sr < ttl)
-          case None => false
-        }
-      }
-    }
+  case class SeenCfg(keyDirs: IndexedSeq[String], round: Int, ttl: Int) {
+    def probe(b: Int, h: Long): Boolean =
+      keyDirs.exists(KeyLogCache.get(_, b).contains(h)(sr => ttl <= 0 || round - sr < ttl))
   }
 
   /** `(hostBucket, urlHash) → live frontier member` probe (RefOracle's
@@ -56,18 +44,8 @@ object ProbeExpr {
     */
   case class MemberCfg(addDirs: IndexedSeq[String], remDirs: IndexedSeq[String]) {
     def probe(b: Int, h: Long): Boolean = {
-      def removed(s: Int): Boolean = remDirs.exists { d =>
-        KeyLogCache.get(d, b) match {
-          case Some((hs, aux)) => KeyLog.existsMatch(hs, aux, h)(_ == s)
-          case None => false
-        }
-      }
-      addDirs.exists { d =>
-        KeyLogCache.get(d, b) match {
-          case Some((hs, aux)) => KeyLog.existsMatch(hs, aux, h)(s => !removed(s))
-          case None => false
-        }
-      }
+      def removed(s: Int): Boolean = remDirs.exists(KeyLogCache.get(_, b).contains(h)(_ == s))
+      addDirs.exists(KeyLogCache.get(_, b).contains(h)(s => !removed(s)))
     }
   }
 
@@ -76,12 +54,8 @@ object ProbeExpr {
     * delta log resolves by pair lookup — no max-version scan, no shuffle.
     */
   case class RemovedCfg(remDirs: IndexedSeq[String]) {
-    def probe(b: Int, h: Long, s: Int): Boolean = remDirs.exists { d =>
-      KeyLogCache.get(d, b) match {
-        case Some((hs, aux)) => KeyLog.existsMatch(hs, aux, h)(_ == s)
-        case None => false
-      }
-    }
+    def probe(b: Int, h: Long, s: Int): Boolean =
+      remDirs.exists(KeyLogCache.get(_, b).contains(h)(_ == s))
   }
 
   case class SeenLive(cfg: SeenCfg, left: Expression, right: Expression)

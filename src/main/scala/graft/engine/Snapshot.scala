@@ -1,5 +1,8 @@
 package graft.engine
 
+import org.json4s.{DefaultFormats, Formats, JInt, JNothing, JObject}
+import org.json4s.jackson.{JsonMethods, Serialization}
+
 /** Minimal Iceberg-style snapshot log over Parquet.
   *
   * No Iceberg jars exist in /opt/spark/jars (offline coursier), so the table
@@ -9,9 +12,10 @@ package graft.engine
   *     ever see fully-committed snapshots (Iceberg's metadata-swap commit);
   *   - parent chain: each manifest records its parent snapshot id;
   *   - exact resume: the manifest carries every state pointer a crawl round
-  *     needs (frontier add/removal log, seen delta dirs + key sidecars, bloom
-  *     sidecar, fetched/schedule/metrics delta dirs, round counter,
-  *     scheduled-budget counter);
+  *     needs (frontier add/removal log, seen delta dirs + key sidecars,
+  *     fetched/schedule/metrics delta dirs, round counter, scheduled-budget
+  *     counter). The URL-seen filter is part of the seen key runs
+  *     ([[KeyLog]] format 2), so it commits with them;
   *   - snapshot expiry: superseded state dirs older than `retain` commits
   *     are deleted (ref analog: oldest-first TTL cache eviction,
   *     medcrawler/base.py:82-86).
@@ -51,14 +55,15 @@ object Snapshot {
     *                    refetch re-stamps the same URL); re-baselined to the
     *                    exact distinct-key count at each compaction
     * @param fmt         manifest layout format; [[CrawlEngine.resume]]
-    *                    refuses a layout older than [[Snapshot.Fmt]]
-    * @param buckets     numBuckets the key sidecars + bloom were written
-    *                    with. Probes compute hostBucket = pmod(hash, buckets),
-    *                    so resuming with a DIFFERENT cfg.numBuckets silently
-    *                    misses every membership probe (refetch storm, frontier
-    *                    duplicates) — resume fails loudly on mismatch instead.
-    *                    0 = written by a pre-buckets build (unknown; resume
-    *                    accepts and the next commit stamps it)
+    *                    refuses a layout older than [[Snapshot.Fmt]]. A
+    *                    manifest with no `fmt` field reads as 1
+    * @param buckets     numBuckets the key sidecars were written with.
+    *                    Probes compute hostBucket = pmod(hash, buckets), so
+    *                    resuming with a DIFFERENT cfg.numBuckets silently
+    *                    misses every membership probe (refetch storm,
+    *                    frontier duplicates) — resume fails loudly on
+    *                    mismatch instead. 0 only in a manifest older
+    *                    than the field, whose `fmt` resume refuses
     */
   case class Manifest(
       snapshotId: Int,
@@ -73,7 +78,6 @@ object Snapshot {
       fetchedDirs: Vector[String],
       scheduleDirs: Vector[String],
       metricsDirs: Vector[String],
-      bloomDir: String,
       frontierCount: Long,
       seenCount: Long,
       fetchedCount: Long,
@@ -82,8 +86,10 @@ object Snapshot {
       buckets: Int = 0,
       frontierDeadCount: Long = 0L)
 
-  /** Current manifest layout format (see [[Manifest.fmt]]). */
-  val Fmt = 2
+  /** Current manifest layout format (see [[Manifest.fmt]]): 3 since the
+    * URL-seen filter moved from per-bucket `bloom/` files into the key runs.
+    */
+  val Fmt = 3
 
   private def metaDir(root: String): String = s"$root/meta"
 
@@ -110,12 +116,13 @@ object Snapshot {
     fromJson(new String(Fs.readAllBytes(s"${metaDir(root)}/v$id.json"), "UTF-8"))
 
   /** Expire snapshots older than `retain` generations, Iceberg-style:
-    * delete their frontier dirs plus any seen-delta / bloom dirs no longer
-    * referenced by a retained manifest. Like Iceberg's expire_snapshots,
-    * time-travel to an expired snapshot is no longer guaranteed (its state
-    * files may be gone if superseded by compaction); the attempts/metrics
-    * DATA outputs are never touched. Bloom dirs share unchanged bucket
-    * files via hard links, so deleting a superseded dir only unlinks.
+    * delete their frontier dirs plus any seen-delta / key-run dirs no
+    * longer referenced by a retained manifest. Like Iceberg's
+    * expire_snapshots, time-travel to an expired snapshot is no longer
+    * guaranteed (its state files may be gone if superseded by compaction);
+    * the attempts/metrics DATA outputs are never touched. Key-run dirs share
+    * unchanged bucket runs via hard links, so deleting a superseded dir only
+    * unlinks.
     */
   def expire(root: String, retain: Int = 3): Unit = {
     val vs = versions(root)
@@ -132,70 +139,17 @@ object Snapshot {
     * unreferenced (parquet DATA outputs — attempts, metrics — are kept).
     */
   private def stateDirs(m: Manifest): Vector[String] =
-    Vector(m.bloomDir) ++ m.frontierAddDirs ++ m.frontierKeyDirs ++
-      m.frontierRemDirs ++ m.seenDirs ++ m.seenKeyDirs
+    m.frontierAddDirs ++ m.frontierKeyDirs ++ m.frontierRemDirs ++
+      m.seenDirs ++ m.seenKeyDirs
 
-  // --- tiny hand-rolled JSON (flat schema, controlled strings) ---
+  private implicit val formats: Formats = DefaultFormats
 
-  private def q(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
-  private def arr(v: Vector[String]): String = v.map(q).mkString("[", ",", "]")
-
-  def toJson(m: Manifest): String =
-    s"""{"snapshotId":${m.snapshotId},"parentId":${m.parentId},"round":${m.round},
-       |"totalScheduled":${m.totalScheduled},
-       |"frontierAddDirs":${arr(m.frontierAddDirs)},
-       |"frontierKeyDirs":${arr(m.frontierKeyDirs)},
-       |"frontierRemDirs":${arr(m.frontierRemDirs)},
-       |"seenDirs":${arr(m.seenDirs)},"seenKeyDirs":${arr(m.seenKeyDirs)},
-       |"fetchedDirs":${arr(m.fetchedDirs)},
-       |"scheduleDirs":${arr(m.scheduleDirs)},"metricsDirs":${arr(m.metricsDirs)},
-       |"bloomDir":${q(m.bloomDir)},"frontierCount":${m.frontierCount},
-       |"frontierDeadCount":${m.frontierDeadCount},
-       |"seenCount":${m.seenCount},"fetchedCount":${m.fetchedCount},
-       |"done":${m.done},"fmt":${m.fmt},"buckets":${m.buckets}}"""
-      .stripMargin.replace("\n", "")
+  def toJson(m: Manifest): String = Serialization.write(m)
 
   def fromJson(json: String): Manifest = {
-    // strings in this manifest are paths we wrote ourselves (no embedded
-    // quotes), so a simple field scanner is sufficient and dependency-free
-    def str(k: String): String = {
-      val m = ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(json)
-      m.map(_.group(1)).getOrElse(sys.error(s"manifest missing $k"))
-    }
-    def num(k: String): Long = {
-      val m = ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(json)
-      m.map(_.group(1).toLong).getOrElse(sys.error(s"manifest missing $k"))
-    }
-    def bool(k: String): Boolean =
-      ("\"" + k + "\":(true|false)").r.findFirstMatchIn(json)
-        .exists(_.group(1) == "true")
-    def strArr(k: String): Vector[String] = {
-      val m = ("\"" + k + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(json)
-        .getOrElse(sys.error(s"manifest missing $k"))
-      val body = m.group(1).trim
-      if (body.isEmpty) Vector.empty
-      else body.split(",").toVector.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-    }
-    Manifest(
-      num("snapshotId").toInt, num("parentId").toInt, num("round").toInt,
-      num("totalScheduled"), strArr("frontierAddDirs"),
-      strArr("frontierKeyDirs"), strArr("frontierRemDirs"),
-      strArr("seenDirs"), strArr("seenKeyDirs"),
-      strArr("fetchedDirs"), strArr("scheduleDirs"), strArr("metricsDirs"),
-      str("bloomDir"), num("frontierCount"), num("seenCount"),
-      num("fetchedCount"), bool("done"),
-      // absent in old manifests: 1 lets resume refuse the layout
-      fmt = "\"fmt\":(-?\\d+)".r.findFirstMatchIn(json)
-        .map(_.group(1).toInt).getOrElse(1),
-      // absent in manifests written by pre-buckets builds (0 = unknown)
-      buckets = "\"buckets\":(-?\\d+)".r.findFirstMatchIn(json)
-        .map(_.group(1).toInt).getOrElse(0),
-      // absent in older manifests: 0 resets the majority-dead trigger on
-      // resume; at worst the first post-resume compaction waits for the
-      // add-dir count the way every pre-field build did
-      frontierDeadCount = "\"frontierDeadCount\":(-?\\d+)".r
-        .findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(0L))
+    val v = JsonMethods.parse(json)
+    // absent in the first layout: 1 lets resume refuse it
+    val withFmt = if (v \ "fmt" == JNothing) v.merge(JObject("fmt" -> JInt(1))) else v
+    withFmt.extract[Manifest]
   }
 }

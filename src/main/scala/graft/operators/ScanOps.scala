@@ -25,9 +25,10 @@ object ScanOps {
     * stage out to 32 tasks INFLATED total task-CPU 15–50× (per-task fixed
     * overhead + this virtualized box's wide-concurrency penalty — the same
     * effect the crawl bench records as cpu_overhead_ratio_32c_over_4c
-    * ≈ 1.37) and made wall WORSE under load; the repro lives in
-    * FloorDebug.scala. video_frames (~1 ms/row of codec work) gains 4×
-    * wall; the gram/token pipelines lose — so they stay unfloored.
+    * ≈ 1.37) and made wall WORSE under load; the repro is
+    * `src/test/scala/graft/FloorDebug.scala` at commit `3481656`.
+    * video_frames (~1 ms/row of codec work) gains 4× wall; the gram/token
+    * pipelines lose — so they stay unfloored.
     */
   private[operators] def parallelismFloor(df: DataFrame): DataFrame = {
     val floor = df.sparkSession.sparkContext.defaultParallelism

@@ -492,8 +492,7 @@ object TextOps {
 
   /** [[decontaminate]]'s documented 100 TB swap, CODED: the eval gram set
     * folds into ONE compact Bloom filter (the engine's map-side-combined
-    * `BloomBuildAgg` — the same native aggregate the crawl's URL-seen
-    * prefilter uses), and every train gram is prescreened by Spark's native
+    * `BloomBuildAgg`), and every train gram is prescreened by Spark's native
     * codegen `might_contain` expression before anything joins. Only bloom
     * survivors (true hits + ~fpp of the rest) reach the exact broadcast
     * verify join, so the per-gram hot path never touches a hash relation

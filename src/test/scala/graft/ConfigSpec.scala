@@ -25,9 +25,6 @@ class ConfigSpec extends AnyFunSuite {
     bad(CrawlConfig(gamma = 0.0))
     bad(CrawlConfig(gamma = 1.5))
     bad(CrawlConfig(numBuckets = 0))
-    bad(CrawlConfig(bloomExpectedItems = -1))
-    bad(CrawlConfig(bloomFpp = 0.0))
-    bad(CrawlConfig(bloomFpp = 7.0))
     bad(CrawlConfig(ttlRounds = -1))
     // compactEvery = 1 would fire major compaction EVERY round (the very
     // rewrite cadence the tiered fold exists to avoid) and orphan the
@@ -42,7 +39,6 @@ class ConfigSpec extends AnyFunSuite {
     CrawlConfig(maxRetries = 1) // fetch-once, no retry
     CrawlConfig(gamma = 1.0) // undamped OPIC
     CrawlConfig(ttlRounds = 0) // seen-forever
-    CrawlConfig(bloomExpectedItems = 0) // auto-size
     CrawlConfig(compactEvery = 2) // most aggressive legal compaction
     CrawlConfig(l1MergeDenom = 1) // merge whenever L1 >= base
   }

@@ -78,19 +78,6 @@ class CrawlEngineSpec extends AnyFunSuite {
     }
   }
 
-  test("adversarially small Bloom (high fpp) does not change results") {
-    val spec = CorpusSpec(numHosts = 5, pagesPerHost = 30)
-    // expectedItems=8 → heavily saturated filter, fpp → ~1: every candidate
-    // funnels through the exact anti-join; results must be identical
-    val cfg = CrawlConfig(maxResults = 100, maxRounds = 20, numBuckets = 8,
-      bloomExpectedItems = 8L, bloomFpp = 0.5)
-    val seeds = spec.defaultSeeds(2)
-    val oracle = RefOracle.crawl(spec, seeds, cfg)
-    val res = CrawlEngine.run(spark, spec, seeds, cfg, tmpDir())
-    assert(engineOrder(res) == oracle.order)
-    assert(engineSeen(res) == oracle.seen)
-  }
-
   test("resume from snapshot ≡ uninterrupted run") {
     val spec = CorpusSpec(numHosts = 5, pagesPerHost = 30)
     val seeds = spec.defaultSeeds(2)
@@ -132,13 +119,15 @@ class CrawlEngineSpec extends AnyFunSuite {
     // pmod(hash, 8) and miss every stored key — resume must fail loudly
     // at entry instead of silently refetching the whole seen set
     rejects(cfg.copy(numBuckets = 4), "numBuckets")
-    // an old-layout manifest (fmt = 1, or no fmt field at all) is refused
+    // an old-layout manifest (fmt = 1, fmt = 2 from before the key runs
+    // carried their filters, or no fmt field at all) is refused
     val next = m.copy(snapshotId = m.snapshotId + 1, parentId = m.snapshotId)
     val fmt1 = Snapshot.toJson(next.copy(fmt = 1))
+    val fmt2 = Snapshot.toJson(next.copy(fmt = 2))
     val noFmt = Snapshot.toJson(next).replace(s""","fmt":${Snapshot.Fmt}""", "")
     assert(!noFmt.contains("\"fmt\""), noFmt)
     val nextPath = Paths.get(dir, "meta", s"v${next.snapshotId}.json")
-    for (json <- Seq(fmt1, noFmt)) {
+    for (json <- Seq(fmt1, fmt2, noFmt)) {
       Files.writeString(nextPath, json)
       rejects(cfg, "fmt")
       Files.delete(nextPath)
@@ -146,6 +135,21 @@ class CrawlEngineSpec extends AnyFunSuite {
     // the recorded value still resumes
     val res = CrawlEngine.resume(spark, spec, cfg, dir)
     assert(res.manifest.buckets == 8)
+  }
+
+  test("a crawl root whose path holds , ] and \" runs and resumes ≡ a plain root") {
+    val spec = CorpusSpec(numHosts = 5, pagesPerHost = 30)
+    val seeds = spec.defaultSeeds(2)
+    val cfg = CrawlConfig(maxResults = 80, maxRounds = 6, numBuckets = 8)
+    val plain = CrawlEngine.run(spark, spec, seeds, cfg, tmpDir())
+    val odd = Paths.get(tmpDir(), "a,b]c\"d").toString
+    CrawlEngine.run(spark, spec, seeds, cfg.copy(maxRounds = 3), odd)
+    val res = CrawlEngine.resume(spark, spec, cfg, odd)
+    assert(res.manifest.seenDirs.forall(_.startsWith(odd)), res.manifest.seenDirs)
+    assert(Snapshot.latest(odd).contains(res.manifest))
+    assert(engineOrder(res) == engineOrder(plain), "crawl order mismatch")
+    assert(engineSeen(res) == engineSeen(plain), "seen set mismatch")
+    assert(res.manifest.totalScheduled == plain.manifest.totalScheduled)
   }
 
   test("time-travel: an older snapshot is a prefix of the final state") {
@@ -684,5 +688,19 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(res.rounds == 4 && !res.manifest.done)
     assert(engineOrder(res) == oracle.order, "crawl order mismatch")
     assert(engineSeen(res) == oracle.seen, "seen set mismatch")
+  }
+
+  test("the deep corpus's schedule phase runs one task") {
+    // the host-policy relation (30 rows) is narrowed like any round reader,
+    // so its broadcast collects in one task, not one per core
+    val (dir, sc) = (tmpDir(), spark.sparkContext)
+    CrawlEngine.run(spark, DeepCrawl.spec, DeepCrawl.seeds, DeepCrawl.cfg, dir)
+    org.apache.spark.graft.BusDrain.drain(sc) // no earlier job
+    val jobs = new Telemetry.Listener
+    sc.addSparkListener(jobs)
+    try CrawlEngine.resume(spark, DeepCrawl.spec, DeepCrawl.cfg.copy(maxRounds = 2), dir)
+    finally { org.apache.spark.graft.BusDrain.drain(sc); sc.removeSparkListener(jobs) }
+    val schedule = jobs.phases("round 1 schedule")
+    assert(schedule.tasks == 1, s"schedule: ${schedule.jobs} jobs, ${schedule.tasks} tasks")
   }
 }

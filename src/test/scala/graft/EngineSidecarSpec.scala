@@ -4,12 +4,12 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.core._
-import graft.engine.{Bloom, CrawlEngine, Fs, LruCache, NioLocalFileSystem}
+import graft.engine.{CrawlEngine, Fs, KeyLog, LruCache, NioLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit gates for the executor-local sidecar machinery (probe caches,
-  * bloom/key-run state) that the crawl hot path leans on.
+  * filtered key-run state) that the crawl hot path leans on.
   */
 class EngineSidecarSpec extends AnyFunSuite {
 
@@ -17,13 +17,13 @@ class EngineSidecarSpec extends AnyFunSuite {
     Session.builder(4).appName("engine-sidecar-spec").getOrCreate()
 
   test("bloom rebuild at major compaction un-learns TTL-dead keys (judge r3 #3)") {
-    // long TTL-churn crawl: stamps die every ttl rounds and many re-stamp;
-    // the merged-forward filter chain only accretes, so without the rebuild
-    // every dead key would still pass the prefilter forever (fpp -> 1 over
-    // a long crawl). After the 16-delta major compaction rebuilds per-bucket
-    // filters from LIVE stamps only, keys whose stamps were already dead at
-    // compaction must pass at ~fpp — while every live stamp still passes
-    // (a false negative would drop URLs: correctness, not just cost).
+    // long TTL-churn crawl: stamps die every ttl rounds and many re-stamp.
+    // Each seen key run carries a filter over its own keys, and the
+    // 16-delta major compaction writes the compacted runs from LIVE stamps
+    // only, so keys whose stamps were already dead at compaction must pass
+    // the compacted runs' filters at ~fpp — while every live stamp still
+    // passes (a false negative would drop URLs: correctness, not just
+    // cost).
     val spec = CorpusSpec(numHosts = 4, pagesPerHost = 30, failures = false)
     val cfg = CrawlConfig(maxResults = Long.MaxValue, maxRounds = 20,
       numBuckets = 8, ttlRounds = 3)
@@ -50,19 +50,21 @@ class EngineSidecarSpec extends AnyFunSuite {
       s"churn produced only ${deadAtCompact.length} dead-at-compaction keys — vacuous")
     assert(liveNow.nonEmpty)
 
-    def bloomPass(bucket: Int, h: Long): Boolean = {
-      val p = Bloom.bucketPath(res.manifest.bloomDir, bucket)
-      !Fs.exists(p) || Bloom.deserialize(Fs.readAllBytes(p)).mightContainLong(h)
-    }
+    // a key passes when some committed seen run's filter passes it: the
+    // compacted base (or a base merged from it since), or an L1 run
+    val seenKeyDirs = res.manifest.seenKeyDirs
+    def bloomPass(bucket: Int, h: Long): Boolean =
+      seenKeyDirs.exists(KeyLog.readRun(_, bucket).filter.mightContainLong(h))
     liveNow.foreach { case (h, b, _) =>
-      assert(bloomPass(b, h), s"LIVE key $h absent from rebuilt filter")
+      assert(bloomPass(b, h), s"LIVE key $h absent from the seen runs' filters")
     }
     val deadPass = deadAtCompact.count { case (h, b, _) => bloomPass(b, h) }
     val rate = deadPass.toDouble / deadAtCompact.length
-    info(f"dead-key prefilter pass-rate after rebuild: $rate%.3f " +
-      f"(${deadAtCompact.length} dead keys, fpp=${cfg.bloomFpp})")
+    info(f"dead-key filter pass-rate after compaction: $rate%.3f " +
+      f"(${deadAtCompact.length} dead keys, fpp=${KeyLog.Fpp})")
     assert(rate <= 0.25,
-      f"rebuilt filter still passes $rate%.2f of TTL-dead keys (want ~fpp)")
+      f"compacted runs' filters still pass $rate%.2f of TTL-dead keys (want ~fpp)")
+    assert(!Fs.exists(s"$out/bloom"), "a crawl root holds a bloom/ dir")
 
     // no orphan key-run dirs: every surviving seen_keys/frontier_keys dir
     // must be referenced by a retained manifest — a compacting round must

@@ -35,7 +35,9 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
   * crawl_deep makes it. Per resume round it prints the wall time, jobs,
   * tasks, task-CPU and compiled classes of the round, then the same per
   * phase ([[Telemetry.Listener.phases]]; the tail phases overlap, so their
-  * compile counts may overlap too).
+  * compile counts may overlap too), then the bytes of committed state per
+  * family: the files under the dirs the round's manifest references, a
+  * hard-linked file counted once.
   */
 object Profile {
   private val TopStages = 10
@@ -77,10 +79,29 @@ object Profile {
           println(f"[profile]   ${label.stripPrefix(s"round $r ")}%-18s jobs ${p.jobs}%3d " +
             f"tasks ${p.tasks}%4d cpu ${p.cpuNs / 1e9}%6.3f s compiled ${p.classes}%3d classes")
         }
+        println("[profile]   committed bytes: " + stateBytes(res.manifest)
+          .map { case (family, n) => s"$family $n" }.mkString(", "))
         scheduled = res.totalScheduled
         if (res.manifest.done) println(s"[profile] the crawl is done after round $r")
       }
     } finally { spark.stop(); Fs.deleteLocalDir(dir) }
+  }
+
+  /** Bytes of the files under each state family's committed dirs, each
+    * inode once.
+    */
+  private def stateBytes(m: graft.engine.Snapshot.Manifest): Seq[(String, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val inodes = scala.collection.mutable.Set.empty[AnyRef]
+    Seq("frontier" -> m.frontierAddDirs, "frontier_keys" -> m.frontierKeyDirs,
+      "frontier_rem" -> m.frontierRemDirs, "seen" -> m.seenDirs,
+      "seen_keys" -> m.seenKeyDirs).map { case (family, dirs) =>
+      family -> dirs.map(Paths.get(_)).filter(Files.exists(_)).flatMap { d =>
+        val files = Files.walk(d)
+        try files.iterator.asScala.filter(Files.isRegularFile(_)).toVector
+        finally files.close()
+      }.filter(f => inodes.add(Files.getAttribute(f, "unix:ino"))).map(Files.size).sum
+    }
   }
 
   private def queries(args: Array[String]): Unit = {
